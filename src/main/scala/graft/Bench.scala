@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: one JSON line of per-query wall times.
   *
@@ -14,49 +13,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Let AQE size post-shuffle partitions by the advisory target
-      // instead of pinning them to default parallelism — Spark's own
-      // recommendation for this knob. At sf0.1 a KB-scale shuffle
-      // coalesces to 1 task instead of 32 (pure scheduling overhead);
-      // at 100 TB the 64 MB advisory target governs either way.
-      // (A/B'd at 4 MB advisory too: no reliable gain — the dedup/LSH
-      // family's run-to-run noise at this box dwarfs the delta.)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // ...but the 64 MB default advisory is a NETWORK-bound number.
-      // On this CPU-bound local box it coalesced q10's 15M-group
-      // exchange to ~4 tasks (round-7 probe: 10.3 s vs 2.9 s at sf10
-      // — a 3.5× penalty on every multi-MB CPU-heavy exchange); 8 MB
-      // keeps KB-scale shuffles at 1 task while giving aggregate
-      // stages full width. A real cluster re-tunes this per its
-      // shuffle fabric; the principle (advisory governs, sized to the
-      // execution bottleneck) is the same.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "8m"))
-      // Shuffle files on the fastest local medium (round 16). Thread
-      // dumps during 32-task stages showed the tasks in shuffle-file
-      // syscalls (FileChannel map/unmap, open, write) on the virtio
-      // disk behind /tmp — ~0.25 s of a 0.58 s exchange+agg stage was
-      // file I/O, not compute. tmpfs removes it (probe: 0.58 → 0.31 s
-      // per exchange stage). This is the standard "shuffle on the
-      // fastest local disk" deployment rule (guide §2.1: local disk
-      // bandwidth can be the binding shuffle limit); a production
-      // cluster provisions NVMe for exactly this. Parameterised; falls
-      // back to the JVM default when tmpfs is absent.
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
-        else System.getProperty("java.io.tmpdir")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(4))
 
     val warmups = Seq(
       "q01_pricing_summary",   // lineitem scan + agg

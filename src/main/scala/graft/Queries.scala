@@ -207,13 +207,13 @@ object Queries extends ColumnSyntax {
 
   /** q10b — the SAME chain on lineitem/orders BUCKETED 32-way by
     * orderkey ([[graft.io.BucketedLayout]]): the graded form of the
-    * exchange-free plan tools/Q10Bucketed demonstrated (VERDICT r6
-    * item 4). The one-time bucketed write happens at DataFrame
-    * construction (the layout cost a warehouse pays once); execution
-    * then plans zero orderkey-keyed exchanges — the per-order
-    * aggregate and the orders join both ride the bucket spec
-    * (BucketedJoinSpec asserts). Same oracle SQL as q10: bucketing
-    * must be answer-invariant.
+    * exchange-free plan tools/Q10Bucketed (at commit ea0c763)
+    * demonstrated (VERDICT r6 item 4). The one-time bucketed write
+    * happens at DataFrame construction (the layout cost a warehouse
+    * pays once); execution then plans zero orderkey-keyed exchanges
+    * — the per-order aggregate and the orders join both ride the
+    * bucket spec (BucketedJoinSpec asserts). Same oracle SQL as q10:
+    * bucketing must be answer-invariant.
     */
   private def q10b(s: SparkSession, dir: String): DataFrame = {
     val l = graft.io.BucketedLayout.table(s, dir, "lineitem", "l_orderkey")

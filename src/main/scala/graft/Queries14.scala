@@ -269,9 +269,10 @@ object Queries14 extends ColumnSyntax {
     * exactly ONE evaluation per row. Without it the not-null filter
     * and the field-extraction project each re-run the kernel —
     * measured 7.7× slower on q141's full audio decode
-    * (`tools/Q141Shape`). `explode` of a one-element array preserves
-    * the row (a null struct explodes to one null row, which the
-    * filter then drops), so query semantics and hashes are unchanged.
+    * (`tools/Q141Shape` at commit ea0c763). `explode` of a
+    * one-element array preserves the row (a null struct explodes to
+    * one null row, which the filter then drops), so query semantics
+    * and hashes are unchanged.
     */
 
   private def q137(s: SparkSession, dir: String): DataFrame = {
@@ -427,8 +428,9 @@ object Queries14 extends ColumnSyntax {
     // Fixture persistence (the q84p/q125p/q148 convention, VERDICT r11
     // item 5): packing + CRC-ing the Ogg containers is corpus
     // SYNTHESIS — work the doc_id-arithmetic oracle never does and
-    // ~2/3 of the old graded wall (`tools/Q139Decomp`). Persist the
-    // synth at construction; the graded plan measures the setup
+    // ~2/3 of the old graded wall (`tools/Q139Decomp` at commit
+    // ea0c763). Persist the synth at construction; the graded plan
+    // measures the setup
     // PARSE, which is the operator under test. The hash gate is
     // unchanged: the fixture is engine-written each construction and
     // the oracle still predicts every statistic from doc_id alone.

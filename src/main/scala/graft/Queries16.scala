@@ -137,7 +137,7 @@ object Queries16 {
   private def q152Text(s: SparkSession): org.apache.spark.sql.Column = {
     val d = col("doc_id")
     val idx = (d * 31 + col("k") * 7 + (d - d % 13) / 13) % 12
-    val pools = graft.tools.LangIdTrain.Pools
+    val pools = graft.ext.LangIdFixtures.Pools
     val word = when(d % 4 === 0,
         element_at(array(pools("en").map(lit): _*), (idx + 1).cast("int")))
       .when(d % 4 === 1,
@@ -169,7 +169,7 @@ object Queries16 {
   }
 
   private val q152Sql: String = {
-    val pools = graft.tools.LangIdTrain.Pools
+    val pools = graft.ext.LangIdFixtures.Pools
     def lst(l: String) = pools(l).map(w => s"'$w'").mkString("[", ", ", "]")
     val featExprs = graft.ext.LangId.Ngrams.zipWithIndex.map { case (g, i) =>
       val ge = g.replace("'", "''")

@@ -202,14 +202,14 @@ object Queries17 {
   private def q166Text(s: SparkSession): org.apache.spark.sql.Column = {
     val d = col("doc_id")
     val idx = ((d * 31 + col("k") * 7 + (d - d % 13) / 13) % 12 + 1).cast("int")
-    val pools = graft.tools.LangIdTrain.Pools
+    val pools = graft.ext.LangIdFixtures.Pools
     val langs = graft.ext.LangId.Langs
     val chain = langs.zipWithIndex.foldLeft(Option.empty[org.apache.spark.sql.Column]) {
       case (acc, (l, i)) =>
         val v = element_at(array(pools(l).map(lit): _*), idx)
         Some(acc.fold(when(d % 10 === i, v))(_.when(d % 10 === i, v)))
     }.get.otherwise(
-      element_at(array(graft.tools.LangIdTrain.NonePool.map(lit): _*), idx))
+      element_at(array(graft.ext.LangIdFixtures.NonePool.map(lit): _*), idx))
     chain
   }
 
@@ -234,7 +234,7 @@ object Queries17 {
   }
 
   private val q166Sql: String = {
-    val pools = graft.tools.LangIdTrain.Pools
+    val pools = graft.ext.LangIdFixtures.Pools
     val langs = graft.ext.LangId.Langs
     def lst(ws: Seq[String]) = ws.map(w => s"'$w'").mkString("[", ", ", "]")
     val featExprs = graft.ext.LangId.Ngrams.zipWithIndex.map { case (g, i) =>
@@ -251,7 +251,7 @@ object Queries17 {
     val wordCase = langs.zipWithIndex.map { case (l, i) =>
       s"WHEN $i THEN list_extract(${lst(pools(l))}, idx + 1)"
     }.mkString("\n      ") +
-      s"\n      ELSE list_extract(${lst(graft.tools.LangIdTrain.NonePool)}, idx + 1)"
+      s"\n      ELSE list_extract(${lst(graft.ext.LangIdFixtures.NonePool)}, idx + 1)"
     s"""WITH base AS (
        |  SELECT doc_id FROM documents WHERE doc_id < 4000
        |), wk AS (

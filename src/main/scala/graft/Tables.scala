@@ -7,8 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `spark.read.parquet(path)` re-creates the relation on EVERY call:
   * DataSource resolution, file listing (InMemoryFileIndex), footer
   * schema read — measured ~90 ms of driver-side work per call on this
-  * box (tools/FloorProbe: fresh read+agg 283 ms vs cached relation
-  * 178 ms; fresh count 193 ms vs 105 ms). A catalogued table in
+  * box (tools/FloorProbe at commit ea0c763: fresh read+agg 283 ms vs
+  * cached relation 178 ms; fresh count 193 ms vs 105 ms). A catalogued table in
   * production Spark pays this ONCE — `spark.table` resolves to a
   * relation whose FileIndex the session catalog retains — so a bench
   * that re-reads by path per query measures relation-creation floor,

@@ -1,29 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // if events.parquet carries TIMESTAMP(NANOS) (which Spark cannot
-      // represent), read as Long nanos; Tables.events normalizes either
-      // physical type to Long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shuffle files on tmpfs when present (see Bench.scala round-16
-      // note: task threads otherwise spend ~40% of small exchange
-      // stages in shuffle-file syscalls on the virtio disk)
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-        if (new java.io.File("/dev/shm").canWrite) "/dev/shm"
-        else System.getProperty("java.io.tmpdir")))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(4))
     new java.io.File(outDir).mkdirs()
     // per-query wall time -> timings.json (round 15, verdict item 10):
     // the suite is big enough that a judge needs to separate hypervisor

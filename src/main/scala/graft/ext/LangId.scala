@@ -105,8 +105,9 @@ object LangId {
     * 36-replace feature array) exceeds the 64 KB generated-method
     * limit: the pairwise when-chain form OOM'd codegen outright and
     * even the array_position(array_max) form silently fell back to
-    * interpreted eval (R13PlanCheck pins both). For RUNTIME-trained
-    * weight matrices (spec/training paths) the array form is kept —
+    * interpreted eval (LangIdSpec compiles the pinned path with
+    * codegen fallback off). For RUNTIME-trained weight matrices
+    * (spec/training paths) the array form is kept —
     * its semantics are the contract the kernel mirrors bit-exactly
     * (same left-to-right dot, same σ, same first-max tie break, same
     * floor; LangIdSpec asserts parity). The SQL twin
@@ -177,10 +178,11 @@ object LangId {
       s"THEN 'none' ${branches.mkString(" ")} ELSE '${Langs(n - 1)}' END"
   }
 
-  /** Weights trained by `tools/LangIdTrain` (one-vs-rest GD over a
-    * deterministic 9-language synthetic corpus disjoint from every
-    * oracle corpus; LangIdSpec RE-TRAINS and asserts holdout accuracy,
-    * the none floor, and sign structure) and PINNED as literals — the
+  /** Weights trained by `tools/LangIdTrain` (one-vs-rest GD over the
+    * deterministic 9-language [[LangIdFixtures]] corpus, on seeds
+    * disjoint from every oracle corpus; LangIdSpec RE-TRAINS and
+    * asserts holdout accuracy, the none floor, and sign structure)
+    * and PINNED as literals — the
     * q98 convention: a trained model is a weight vector, and pinning
     * one makes the whole featurize → K·σ(w·x) → argmax path
     * oracle-checkable. Round-13 margin evidence (tools/LangIdTrain):

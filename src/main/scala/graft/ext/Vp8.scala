@@ -122,25 +122,6 @@ object Vp8 {
   // public entry points
   // -----------------------------------------------------------------
 
-  /** last decoded frame's header summary (probe/spec diagnostics) */
-  private[graft] val lastHeader = new ThreadLocal[String]
-
-  /** per-MB decode records when non-null (probe diagnostics only).
-    * ThreadLocal like lastHeader: a JVM-global flag would silently
-    * change decode OUTPUT for concurrent executor-thread decodes if a
-    * probe ever shares the JVM.
-    */
-  private[graft] val debugMb =
-    new ThreadLocal[java.util.ArrayList[String]]
-
-  /** probe diagnostics only: skip the loop filter to separate
-    * reconstruction defects from filter defects (ThreadLocal — see
-    * debugMb)
-    */
-  private[graft] val debugNoFilter = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
-  }
-
   /** raw VP8 frame (WebP 'VP8 ' chunk payload / WebM block payload) */
   def decodeFrameOrNull(bytes: Array[Byte]): Planes =
     if (bytes == null) null else decodeFrameOrNull(bytes, 0, bytes.length)
@@ -298,13 +279,6 @@ object Vp8 {
 
     val mbW = (w + 15) / 16
     val mbH = (h + 15) / 16
-    lastHeader.set(s"seg=$segEnabled map=$updateMap abs=$segAbs " +
-      s"q=${segQuant.mkString("/")} f=${segFilter.mkString("/")} " +
-      s"simple=$simpleFilter lvl=$filterLevel sharp=$sharpness " +
-      s"lfd=$lfDelta ref0=${refDelta(0)} mode0=${modeDelta(0)} " +
-      s"parts=$nParts qi=$yacQi d=$y1dcD/$y2dcD/$y2acD/$uvdcD/$uvacD " +
-      s"noskip=$noSkip pskip=$probSkip")
-
     // padded reconstruction planes with a 1-px top/left border and a
     // 4-px top-right extension (127/129 edge conventions, §12.2)
     val yStride = mbW * 16 + 8
@@ -518,10 +492,6 @@ object Vp8 {
         }
         lfLevel(mbY * mbW + mbX) = lvl.toByte
         lfInner(mbY * mbW + mbX) = hasCoeffs || isB
-        if (debugMb.get != null)
-          debugMb.get.add(s"mb($mbX,$mbY) seg=$seg skip=$skip y=$yMode uv=$uvMode " +
-            s"lvl=$lvl nz=$hasCoeffs" +
-            (if (isB) s" b=${bModes.mkString("")}" else ""))
 
         mbX += 1
       }
@@ -529,7 +499,7 @@ object Vp8 {
     }
 
     // ---- loop filter (§15), MB raster order, after full reconstruction
-    if (filterLevel > 0 && !debugNoFilter.get) {
+    if (filterLevel > 0) {
       mbY = 0
       while (mbY < mbH) {
         var mbX = 0

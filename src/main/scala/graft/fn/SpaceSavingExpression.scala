@@ -25,9 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * compacts it back to ≤ capacity — the textbook alternative to
   * Space-Saving's O(capacity) argmin scan per miss, which an
   * adversarial high-cardinality tail turns into the dominant cost
-  * (tools/SketchScaleSmoke, 20 M rows × 500 k distinct: argmin-scan
-  * form 7.1 s — slower than the exhaustive count+rank plan at 5.9 s —
-  * vs 2.6 s for this form, exact top-3 recovered in all 100 groups).
+  * (tools/SketchScaleSmoke at commit ea0c763, 20 M rows × 500 k
+  * distinct: argmin-scan form 7.1 s — slower than the exhaustive
+  * count+rank plan at 5.9 s — vs 2.6 s for this form, exact top-3
+  * recovered in all 100 groups).
   * When a group's distinct cardinality never exceeds `capacity`, no
   * trim ever fires and the summary is EXACT (err = 0 for every
   * entry) — which is what makes the sketch oracle-checkable against

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.col
   * At 100 TB this is the difference between re-shuffling the fact
   * table per query and paying one write; locally it lets the graded
   * q10b exercise the exchange-free plan the tools/Q10Bucketed probe
-  * demonstrated.
+  * (at commit ea0c763) demonstrated.
   *
   * The write repartitions on the bucket key FIRST (same Murmur3 hash
   * as the bucket spec) so each writer task holds exactly one bucket —

@@ -53,10 +53,10 @@ object Zstd {
   /** `-Dgraft.zstd.forceSpec=true` pins [[decompress]] to the
     * from-spec decoder even when zstd-jni is present — the A/B knob
     * for measuring the fast path at the INGEST level (a real Zarr
-    * read, not a raw-buffer loop; `tools/ZarrZstdProbe`) and an
-    * operational escape hatch should a native-library build
-    * misbehave on some platform. Read per call so one JVM can time
-    * both sides.
+    * read, not a raw-buffer loop; `tools/ZarrZstdProbe` at commit
+    * ea0c763) and an operational escape hatch should a
+    * native-library build misbehave on some platform. Read per call
+    * so one JVM can time both sides.
     */
   private def forceSpec: Boolean =
     java.lang.Boolean.getBoolean("graft.zstd.forceSpec")

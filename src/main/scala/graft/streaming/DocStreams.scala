@@ -623,7 +623,8 @@ object DocStreams {
       // classify, so CollapseProject keeps the split): inlining the
       // 36-replace array into the 9-head argmax exceeds the 64 KB
       // generated-method limit and silently falls back to
-      // interpreted eval (R13PlanCheck pins this with fallback=false)
+      // interpreted eval (LangIdSpec compiles this shape with
+      // codegen fallback off)
       .withColumn("__f", graft.ext.LangId.features(col("text")))
       .withColumn("lang_pred", graft.ext.LangId.classify(
         col("__f"), graft.ext.LangId.PinnedW))

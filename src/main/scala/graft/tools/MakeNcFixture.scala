@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.io.{Nc3, SyntheticGrid}
 
 /** Dev tool: generate the committed NetCDF-3 fixture
@@ -12,12 +11,7 @@ import graft.io.{Nc3, SyntheticGrid}
 object MakeNcFixture {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("data/hermine_subset.nc")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(4)
     val spec = SyntheticGrid.hermineSpec(step = 2.0)
     val grid = SyntheticGrid.cleanSentinels(SyntheticGrid.generate(spark, spec))
     Nc3.write(grid, spec, out, packShort = true, recordTime = true)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ext.H264
-import org.scalatest.funsuite.AnyFunSuite
 
 /** H.264 baseline I-frame luma decoder: structural verification of
   * the CAVLC code tables (prefix-free everywhere; Kraft-complete for
@@ -13,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Deblocking is off in every fixture (disable_deblocking_filter_idc
   * = 1), where skipping the loop filter is exact.
   */
-class H264Spec extends AnyFunSuite {
+class H264Spec extends SparkSpec {
 
   // ------------------------------------------------ VLC structure
 
@@ -825,10 +824,6 @@ class H264Spec extends AnyFunSuite {
     val strided = H264.keyframeFrameFeaturesOrNull(video, 4, 2, 8)
     assert(strided.length === 1 && strided(0)(0) === 0.0)
     // withVideoFrames explode shape
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     val assets = spark.createDataFrame(Seq((7L, video))).toDF("asset_id", "content")
     val got = graft.ext.Multimodal.withVideoFrames(assets, nBins = 4)
@@ -872,10 +867,6 @@ class H264Spec extends AnyFunSuite {
   test("video near-dup: planted keyframe copies recovered through the q84p pair stage") {
     // needs a SparkSession — the composition claim is the DataFrame
     // pipeline itself (decode -> dhash -> band join)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
     def scene(seed: Int)(x: Int, y: Int): Int = {
       val h = seed * 2654435761L
@@ -908,10 +899,6 @@ class H264Spec extends AnyFunSuite {
   }
 
   test("withFeatures routes H.264 video to real keyframe features, not the stub") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
     val flat = graft.ext.VideoFixtures.pcmKeyframeMp4((_, _) => 100)
     val junk = "not media at all".getBytes
     val assets = spark.createDataFrame(Seq((1L, flat), (2L, junk)))
@@ -936,10 +923,6 @@ class H264Spec extends AnyFunSuite {
   }
 
   test("any-keyframe near-dup: videos sharing only their SECOND keyframe pair up") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
     def scene(seed: Int)(x: Int, y: Int): Int =
       (127 + 90 * math.sin((1 + seed % 5) * x / 2.5 + y / 2.0 + seed)).toInt & 0xFF
     def twoKeyframeMp4(s1: Int, s2: Int): Array[Byte] = {

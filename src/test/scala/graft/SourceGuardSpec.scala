@@ -1,0 +1,43 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-tree rules the compiler cannot check: engine code never
+  * depends on the dev tools, and every SparkSession comes from
+  * [[Session]], so the plans Verify checks are the plans Bench times.
+  */
+class SourceGuardSpec extends AnyFunSuite {
+
+  private def sources(root: String): Seq[Path] = {
+    val dir = Paths.get(root)
+    assert(Files.isDirectory(dir), s"$root not found (cwd must be the repo root)")
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  test("no engine code references the tools package; only Session builds a SparkSession") {
+    val all = sources("src/main/scala") ++ sources("src/test/scala")
+    val toolsDir = Paths.get("src/main/scala/graft/tools")
+    // the qualified package name, a package-relative reference or
+    // import from inside package graft, and a renaming import
+    val toolsRef = """graft\.tools\b|\btools\.[A-Z]|import\s+tools\b|\btools\s*=>""".r
+    val builder = """SparkSession\s*\.\s*[bB]uilder""".r
+    val offenders = all.flatMap { p =>
+      val text = Files.readString(p)
+      val tools =
+        if (!p.startsWith(toolsDir) && toolsRef.findFirstIn(text).isDefined)
+          Some(s"$p references the tools package")
+        else None
+      val session =
+        if (p.getFileName.toString != "Session.scala" &&
+            builder.findFirstIn(text).isDefined)
+          Some(s"$p builds its own SparkSession (use graft.Session)")
+        else None
+      tools ++ session
+    }
+    if (offenders.nonEmpty) fail(offenders.mkString("\n"))
+  }
+}

@@ -1,13 +1,12 @@
 package graft
 
 import graft.ext.{Flac, Webm}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** WebM/Matroska EBML metadata walk + FLAC STREAMINFO: hand-built byte
   * fixtures straight from RFC 8794 / the Matroska registry / the FLAC
   * format spec — never written by a media library.
   */
-class WebmMetaSpec extends AnyFunSuite {
+class WebmMetaSpec extends SparkSpec {
 
   // ---- EBML writer: id bytes verbatim, size as a minimal VINT
   private def vintSize(n: Long): Array[Byte] = {
@@ -163,10 +162,6 @@ class WebmMetaSpec extends AnyFunSuite {
   }
 
   test("SQL surface: webm_meta / flac_meta route by content") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
     graft.GraftExtensions.install(spark)
     val assets = spark.createDataFrame(Seq(
       (1L, webm()), (2L, flac()), (3L, "junk".getBytes))).toDF("id", "content")

@@ -14,8 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *      (mixed_160x120 carries a 20×15 entropy image) — pixel-exact
   *      ARGB equality
   *   2. the engine's own writer ([[WebpFixtures]], itself
-  *      cross-validated against libwebp by tools/WebpWriterCheck +
-  *      scripts side) round-trips through the decoder
+  *      cross-validated against libwebp by tools/WebpWriterCheck at
+  *      commit ea0c763 + scripts side) round-trips through the decoder
   *   3. an independent TEST-SIDE token encoder (own bit writer, own
   *      canonical assembly — the FLAC/CABAC discipline) drives the
   *      controlled paths: LZ77 distances above and below the 120-code

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** [[LangId]] — the trained char-n-gram language classifier.
   *
-  *  - RE-TRAINS the one-vs-rest model on the tools/LangIdTrain corpus
+  *  - RE-TRAINS the one-vs-rest model on the [[LangIdFixtures]] corpus
   *    and asserts perfect holdout accuracy on disjoint seeds (the
   *    synthetic pools are strongly separated by construction — less
   *    than 100% means the trainer or featurizer regressed)
@@ -21,7 +21,7 @@ class LangIdSpec extends graft.SparkSpec {
     val langs = LangId.Langs
     (0 until n).map { i =>
       val lang = langs(i % langs.length)
-      (i.toLong, lang, graft.tools.LangIdTrain.doc(lang, seedBase + i))
+      (i.toLong, lang, LangIdFixtures.doc(lang, seedBase + i))
     }.toDF("id", "lang", "text")
   }
 
@@ -38,7 +38,7 @@ class LangIdSpec extends graft.SparkSpec {
     assert(acc === 1.0, s"holdout accuracy $acc")
     // none floor: out-of-set docs classify as none on the SAME model
     val noneDocs = (0 until 60).map { i =>
-      (i.toLong, (0 until 14).map(j => graft.tools.LangIdTrain.NonePool(
+      (i.toLong, (0 until 14).map(j => LangIdFixtures.NonePool(
         ((i * 31 + j * 7 + i / 13) % 12).abs)).mkString(" "))
     }.toDF("id", "text")
     val noneAcc = LangId.featurize(noneDocs, "id", "text")
@@ -55,9 +55,9 @@ class LangIdSpec extends graft.SparkSpec {
       val cls = i % 11
       val text =
         if (cls == 10) "" // zero-evidence row
-        else if (cls == 9) (0 until 14).map(j => graft.tools.LangIdTrain
+        else if (cls == 9) (0 until 14).map(j => LangIdFixtures
           .NonePool(((i * 31 + j * 7) % 12).abs)).mkString(" ")
-        else graft.tools.LangIdTrain.doc(LangId.Langs(cls), 7000 + i)
+        else LangIdFixtures.doc(LangId.Langs(cls), 7000 + i)
       (i.toLong, text)
     }.toDF("id", "text")
     // force the ARRAY form by passing a same-valued copy (different
@@ -70,6 +70,21 @@ class LangIdSpec extends graft.SparkSpec {
     assert(diff === 0L, s"$diff rows disagree")
     val none = both.filter($"native" === "none").count()
     assert(none >= 36L, s"none rows under-represented: $none") // 2 of 11 classes
+    // the split featurize -> classify shape (q152/q166/langGate/
+    // subtitleGate) must COMPILE: with codegen fallback disabled a
+    // too-large generated method throws instead of silently running
+    // interpreted (the inline features+argmax shape and the pairwise
+    // when-chain both did at K = 9)
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val lazyRows = spark.range(1000)
+        .select(concat(lit("the people and "), $"id").as("text"))
+        .withColumn("__f", LangId.features($"text"))
+        .select(LangId.classify($"__f", LangId.PinnedW).as("lang"))
+      val plan = lazyRows.queryExecution.executedPlan.toString
+      assert(plan.contains("*(1)"), s"classifier fell out of codegen:\n$plan")
+      assert(lazyRows.filter($"lang" === "en").count() === 1000L)
+    } finally spark.conf.set("spark.sql.codegen.fallback", "true")
   }
 
   test("the none pool is disjoint from every feature n-gram") {
@@ -77,7 +92,7 @@ class LangIdSpec extends graft.SparkSpec {
     // feature — assert the invariant the pools were built to
     // a doc is pool words space-joined then space-padded: the worst
     // case for cross-word matches is the full concatenation
-    val doc = " " + graft.tools.LangIdTrain.NonePool.mkString(" ") + " "
+    val doc = " " + LangIdFixtures.NonePool.mkString(" ") + " "
     LangId.Ngrams.foreach { g =>
       assert(!doc.contains(g), s"'$g' hits the none pool")
     }
