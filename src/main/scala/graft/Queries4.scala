@@ -190,10 +190,10 @@ object Queries4 extends ColumnSyntax {
   /** J2 NEAREST (not backward) as-of against a small axis — the
     * reference's exact `find_time_index` semantics
     * (trackplot_hycom.py:186-197) through the actual library operator
-    * (AsofJoin.nearestBroadcast: broadcast + min_by argmin with
-    * first-index ties), q52 being the backward variant. Axis = 10
-    * fixed 3-day marks over the events month; the oracle mirrors the
-    * argmin with a deterministic (distance, idx) rank.
+    * (AsofJoin.nearestBroadcast: the axis read at plan time, a
+    * per-row binary search, first-index ties), q52 being the backward
+    * variant. Axis = 10 fixed 3-day marks over the events month; the
+    * oracle mirrors the argmin with a deterministic (distance, idx) rank.
     */
   private val AsofAxis: Seq[Long] =
     (0 until 10).map(k => 1704067200000000000L + k * 259200000000000L)

@@ -7,7 +7,8 @@ import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Binary-search 1-D nearest-neighbor lookup — the kernel behind
-  * [[graft.ops.NearestJoin.nearest1d]].
+  * [[graft.ops.NearestJoin.nearest1d]] and the as-of
+  * [[graft.ops.AsofJoin.nearest]].
   *
   * `vals` must be sorted ascending with one entry per DISTINCT axis
   * value; `keys(i)` is the key reported for `vals(i)` (callers

@@ -42,12 +42,12 @@ object TrackProfile {
   def profile(track: DataFrame, grid: DataFrame, spec: GridSpec,
               cfg: Config = Config()): DataFrame = {
 
-    // J2: nearest grid time per fix (broadcast argmin over the time axis)
-    val timeAxis = track.sparkSession
-      .createDataFrame(spec.times.zipWithIndex.map { case (t, i) => (i, t) })
-      .toDF("t_idx", "t_val")
-    val withTime = AsofJoin.nearestBroadcast(
-      track, Seq("point_id"), "hour", timeAxis, "t_idx", "t_val", "gtime")
+    // J2: nearest grid time per fix — a per-row binary search over the
+    // time axis, read on the driver at plan time (no job, no shuffle).
+    // A fix with a null hour gets a null gtime_t and the gather join
+    // drops it.
+    val withTime = AsofJoin.nearestBroadcast(track, Seq("point_id"), "hour",
+      timeAxis(track.sparkSession, spec), "t_idx", "t_val", "gtime")
 
     // J1: O(1) arithmetic snap onto the regular lat/lon axes
     val snappedLat = NearestJoin.snapRegular(
@@ -112,9 +112,18 @@ object TrackProfile {
                col("depth_idx"), col("depth"))
       .agg(tempAgg.as("water_temp"), salAgg.as("salinity"))
       // presentation-only global sort: the profile is ~|track|·25 rows
-      // (2 000 for Hermine) regardless of grid size, so the range
-      // exchange is O(output), never O(data); drop it for headless
-      // sinks that don't care about order
-      .orderBy("point_id", "depth_idx")
+      // (2 000 for Hermine) regardless of grid size, so one partition
+      // sorts it. coalesce(1) + a local sort gives the same global order
+      // as orderBy without its range exchange, whose sampling job would
+      // run the IDW aggregate a second time
+      .coalesce(1)
+      .sortWithinPartitions("point_id", "depth_idx")
   }
+
+  /** The grid time axis as an (`t_idx`, `t_val`) local table, the J2
+    * right side of [[profile]] and of the streaming profile.
+    */
+  def timeAxis(spark: SparkSession, spec: GridSpec): DataFrame =
+    spark.createDataFrame(spec.times.zipWithIndex.map { case (t, i) => (i, t) })
+      .toDF("t_idx", "t_val")
 }

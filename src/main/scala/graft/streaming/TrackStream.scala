@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.fn.{GeoFns, TimeFns}
 import graft.io.SyntheticGrid.GridSpec
-import graft.ops.{Idw, NearestJoin}
+import graft.ops.{AsofJoin, Idw, NearestJoin}
+import graft.pipeline.TrackProfile
 
 /** The flagship track-profile pipeline on a STREAM of track fixes
   * (SURVEY.md §2.8 north-star): same semantics as
@@ -19,8 +20,8 @@ import graft.ops.{Idw, NearestJoin}
   * grid's value bytes, built once per grid delivery batch-side).
   * The stream then:
   *
-  *   fix → hour (F1) → nearest grid time (broadcast sorted time axis,
-  *   pure expressions) → O(1) arithmetic cell snap (J1) → equi-join
+  *   fix → hour (F1) → nearest grid time (plan-time sorted time axis,
+  *   per-row binary search) → O(1) arithmetic cell snap (J1) → equi-join
   *   the index on (time, lat_idx, lon_idx) → per-row IDW fold over
   *   the 9-element array (A1) → explode depths
   *
@@ -129,31 +130,30 @@ object TrackStream {
     when(den > 0, num / den)
   }
 
-  /** Enrich a stream (or batch frame — same code) of track fixes with
-    * the IDW depth profile. `fixes` needs (point_id, ts, lat, lon)
-    * with lon already wrapped; output one row per (fix × depth).
-    */
-  /** Fix → (grid_time, glat_idx, glon_idx) snap: nearest grid time via
-    * a sorted literal axis (tiny, plan-time; `<=` midpoint keeps the
-    * EARLIER entry on exact ties — reference first-argmin,
-    * trackplot_hycom.py:194), then O(1) arithmetic cell snap (J1).
-    * Shared by [[profile]] and the scope computation in
-    * [[neighborhoodIndexScoped]] so both use identical snapping.
+  /** Fix → (grid_time, glat_idx, glon_idx) snap: nearest grid time
+    * through the batch flagship's own as-of lookup
+    * ([[graft.ops.AsofJoin.nearest]] over the same time axis: a
+    * plan-time literal axis, per-row binary search, first-index ties —
+    * reference first-argmin, trackplot_hycom.py:194), then O(1)
+    * arithmetic cell snap (J1). Shared by [[profile]] and the scope
+    * computation in [[neighborhoodIndexScoped]] so both use identical
+    * snapping.
     */
   private def snapFixes(fixes: DataFrame, spec: GridSpec): DataFrame = {
-    val times = spec.times.sorted
-    val nearestTime = times.zip(times.tail).foldRight(lit(times.last)) {
-      case ((t, next), rest) =>
-        when(col("hour").cast("double") - t <= (next - t) / 2.0, lit(t)).otherwise(rest)
-    }
+    val (_, gridTime) = AsofJoin.nearest(col("hour"),
+      TrackProfile.timeAxis(fixes.sparkSession, spec), "t_idx", "t_val")
     NearestJoin.snapRegular(
       NearestJoin.snapRegular(
         fixes.withColumn("hour", TimeFns.hoursSince2000(col("ts")))
-          .withColumn("grid_time", nearestTime),
+          .withColumn("grid_time", gridTime),
         col("lat"), spec.latMin, spec.latStep, spec.nLat, "glat"),
       col("lon"), spec.lonMin, spec.lonStep, spec.nLon, "glon")
   }
 
+  /** Enrich a stream (or batch frame — same code) of track fixes with
+    * the IDW depth profile. `fixes` needs (point_id, ts, lat, lon)
+    * with lon already wrapped; output one row per (fix × depth).
+    */
   def profile(fixes: DataFrame, index: DataFrame, spec: GridSpec,
               maxDepthLevels: Int = 25): DataFrame = {
     val idx = index.filter(col("depth_idx") < maxDepthLevels) // P5

@@ -159,6 +159,47 @@ class JoinOpsSpec extends SparkSpec {
     assert(got === Seq((0L, 145770L), (1L, 145770L), (2L, 145782L)))
   }
 
+  test("asof nearestBroadcast == driver (|x - t|, idx) argmin (seeded property)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.Prop.propBoolean
+    import org.scalacheck.rng.Seed
+    import spark.implicits._
+    // Axis values are `base + k * step` for a few k in [-6, 6] in random
+    // order: unsorted, often duplicated. Probes land on the marks, on
+    // exact midpoints (half steps), off the marks and outside the axis,
+    // or are null. Two scales: small integers and epoch nanoseconds
+    // 6 h apart (q77's axis).
+    val caseGen = for {
+      (base, step) <- Gen.oneOf((0L, 2L), (1704067200000000000L, 21600000000000L))
+      n <- Gen.choose(1, 8)
+      ks <- Gen.listOfN(n, Gen.choose(-6L, 6L))
+      probes <- Gen.listOfN(12, Gen.frequency(
+        1 -> Gen.const(None),
+        3 -> Gen.choose(-16L, 16L).map(h => Some(base + h * step / 2)),
+        2 -> Gen.choose(-16L * step, 16L * step).map(o => Some(base + o))))
+    } yield (ks.zipWithIndex.map { case (k, i) => (i, base + k * step) }, probes)
+
+    val prop = Prop.forAllNoShrink(caseGen) { case (axisRows, probes) =>
+      val axis = spark.createDataFrame(axisRows).toDF("i", "t")
+      // parallelize, not a local relation: the lookup runs in codegen
+      // on executors instead of being folded on the driver
+      val df = spark.sparkContext.parallelize(probes.zipWithIndex.map(_.swap), 2).toDF("id", "x")
+      val got = AsofJoin.nearestBroadcast(df, Seq("id"), "x", axis, "i", "t", "g")
+        .select($"id", $"g_idx", $"g_t").as[(Int, Option[Int], Option[Long])]
+        .collect().map(r => r._1 -> ((r._2, r._3))).toMap
+      val want = probes.zipWithIndex.map { case (x, id) =>
+        id -> x.fold((Option.empty[Int], Option.empty[Long])) { v =>
+          val (i, t) = axisRows.minBy { case (i, t) => (math.abs(v.toDouble - t.toDouble), i) }
+          (Some(i), Some(t))
+        }
+      }.toMap
+      (got == want) :| s"axis $axisRows probes $probes: got $got want $want"
+    }
+    val res = Check.check(Check.Parameters.default
+      .withInitialSeed(Seed(7L)).withMinSuccessfulTests(60).withWorkers(1), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
   test("asofBackwardUnion: latest right value with rt <= lt per key") {
     import spark.implicits._
     val left = Seq(("a", 10L), ("a", 25L), ("b", 5L)).toDF("k", "t")

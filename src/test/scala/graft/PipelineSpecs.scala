@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import graft.fn.GeoFns
 import graft.io.{SyntheticGrid, TrackReader}
@@ -55,7 +57,7 @@ class TrackReaderSpec extends SparkSpec {
 }
 
 /** §3.1 flagship integration over the deterministic synthetic grid. */
-class TrackProfileSpec extends SparkSpec {
+class TrackProfileSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private lazy val spec: GridSpec = SyntheticGrid.hermineSpec(step = 0.4)
   private lazy val grid = SyntheticGrid.cleanSentinels(
@@ -131,5 +133,29 @@ class TrackProfileSpec extends SparkSpec {
       (nlat, nlon, Some(v)) <- cells.get((ci + di, cj + dj))
     } yield (GeoFns.vincentyKmScala(pt._1, pt._2, nlat, nlon), v)
     assert(math.abs(profNearest - cands.minBy(_._1)._2) < 1e-9)
+  }
+
+  test("multi-storm feed: every fix of both storms is profiled") {
+    // Hermine and Sandy both number their fixes from point_id 0; the
+    // as-of is per row, so neither storm's fixes merge into the other's
+    val both = TrackReader.readIbtracs(spark, "data/{Hermine_track,Sandy_track}.csv")
+    assert(both.count() === 58)
+    assert(TrackProfile.profile(both, grid, spec).count() === 58 * 25)
+  }
+
+  test("plan: no nested-loop join, sort aggregate or range exchange; two shuffles; ordered output") {
+    val track = TrackReader.readNhc(spark, "data/al092016_track.csv")
+    val prof = TrackProfile.profile(track, grid, spec)
+    val keys = prof.collect().toSeq
+      .map(r => (r.getAs[Long]("point_id"), r.getAs[Int]("depth_idx")))
+    assert(keys.length === 2000)
+    assert(keys === keys.sorted, "rows not ordered by (point_id, depth_idx)")
+    // once the query has run, the executed plan holds AQE's final plan
+    val plan = prof.queryExecution.executedPlan
+    for (op <- Seq("BroadcastNestedLoopJoin", "SortAggregate", "rangepartitioning"))
+      assert(!plan.toString.contains(op), plan.toString)
+    // the TrackReader id window (by storm) and the IDW aggregate
+    val shuffles = collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning.toString }
+    assert(shuffles.length === 2, shuffles)
   }
 }
