@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.io.{SyntheticGrid, TrackReader}
 import graft.pipeline.TrackProfile
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** Driver contract — see SURVEY.md §7. */
 object SparkEntry {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -16,7 +16,7 @@ object SparkEntry {
     * Driver smoke-checks rows > 0.
     */
   def entry(spark: SparkSession): DataFrame = {
-    val track = TrackReader.readNhc(spark, "/root/repo/data/al092016_track.csv")
+    val track = TrackReader.readNhc(spark, "data/al092016_track.csv")
     val spec = SyntheticGrid.hermineSpec(step = 0.4)
     val grid = SyntheticGrid.cleanSentinels(SyntheticGrid.generate(spark, spec))
     TrackProfile.profile(track, grid, spec)

@@ -141,7 +141,10 @@ object SyntheticGrid {
     * with zero driver-side coordination.
     */
   def tileId(latIdx: Column, lonIdx: Column, tileSize: Int): Column =
-    (latIdx / tileSize).cast("int") * 10000 + (lonIdx / tileSize).cast("int")
+    (latIdx / tileSize).cast("int") * TileStride + (lonIdx / tileSize).cast("int")
+
+  /** [[tileId]] = tile row · TileStride + tile column. */
+  final val TileStride = 10000
 
   /** Time+tile-partitioned layout (see [[tileId]]): the scan-pruning
     * layout for track-profile workloads. Time-only [[writeGrid]]

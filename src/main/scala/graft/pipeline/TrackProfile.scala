@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.fn.GeoFns
 import graft.io.SyntheticGrid.GridSpec
-import graft.ops.{AsofJoin, NearestJoin, Stencil, Idw}
+import graft.ops.{AsofJoin, GatherKey, NearestJoin, Stencil, Idw}
 
 /** §3.1 flagship query: the HYCOM depth/time profile along a hurricane
   * track — the reference's whole `trackplot_hycom.py` main path,
@@ -31,7 +31,17 @@ object TrackProfile {
       interp: String = "idw",          // "idw" | "nearest" (§2.9 item 4)
       distance: String = "vincenty",   // "vincenty" | "haversine"
       maxDepthLevels: Int = 25,        // P5 (trackplot_hycom.py:148)
-      tileSize: Int = 32)              // tile geometry of a tiled grid layout
+      tileSize: Int = 32) {            // tile geometry of a tiled grid layout
+    require(Config.Interps.contains(interp),
+      s"unknown interp '$interp': expected one of ${Config.Interps.mkString(", ")}")
+    require(Config.Distances.contains(distance),
+      s"unknown distance '$distance': expected one of ${Config.Distances.mkString(", ")}")
+  }
+
+  object Config {
+    val Interps: Seq[String] = Seq("idw", "nearest")
+    val Distances: Seq[String] = Seq("vincenty", "haversine")
+  }
 
   /** @param track  canonical track (point_id, hour, lat, lon, ...)
     * @param grid   long-format grid (Schemas.gridSchema), sentinels
@@ -67,43 +77,21 @@ object TrackProfile {
     val distCol = cfg.distance match {
       case "haversine" =>
         GeoFns.haversineKm(col("lat"), col("lon"), col("n_lat"), col("n_lon"))
-      case _ =>
+      case "vincenty" =>
         GeoFns.vincentyKmNative(col("lat"), col("lon"), col("n_lat"), col("n_lon"))
     }
     val withDist = stencil.withColumn("d_km", distCol)
       .select("point_id", "hour", "gtime_t", "n_i", "n_j", "d_km")
 
-    // J4 gather: equi-join the tiny stencil side against the grid on
-    // exact integer keys; broadcast the stencil so the grid side never
-    // shuffles. P5 depth truncation pushes into the grid scan. When the
-    // grid carries a `tile` partition column (writeGridTiled layout),
-    // the stencil side computes the same tile and joins on it too —
-    // Dynamic Partition Pruning then skips every untouched (time, tile)
-    // partition, reducing the scan from the full field to the ~|track|
-    // tiles the stencils touch (the hyperslab-read equivalent, no
-    // driver-side coordination).
-    val tiled = grid.columns.contains("tile")
-    val stencilSide =
-      if (tiled)
-        withDist.withColumn("n_tile",
-          graft.io.SyntheticGrid.tileId(col("n_i"), col("n_j"), cfg.tileSize))
-      else withDist
-    val baseCond =
-      grid("time") === stencilSide("gtime_t") &&
-      grid("lat_idx") === stencilSide("n_i") &&
-      grid("lon_idx") === stencilSide("n_j")
-    val joinCond =
-      if (tiled) baseCond && grid("tile") === stencilSide("n_tile") else baseCond
-    val gathered = grid
-      .filter(col("depth_idx") < cfg.maxDepthLevels)
-      .join(broadcast(stencilSide), joinCond)
+    // J4: the stencil cells' grid rows, joined on one packed long key
+    val gathered = gather(withDist, grid, spec, cfg)
 
     // A1: IDW (or nearest) per (point, depth) — multi-measure, one pass
     val (tempAgg, salAgg) = cfg.interp match {
       case "nearest" =>
         (Idw.nearestValue(col("water_temp"), col("d_km")),
          Idw.nearestValue(col("salinity"), col("d_km")))
-      case _ =>
+      case "idw" =>
         (Idw.idw(col("water_temp"), col("d_km")),
          Idw.idw(col("salinity"), col("d_km")))
     }
@@ -118,6 +106,36 @@ object TrackProfile {
       // run the IDW aggregate a second time
       .coalesce(1)
       .sortWithinPartitions("point_id", "depth_idx")
+  }
+
+  /** J4 gather: the grid rows of every stencil cell, depth-truncated
+    * (P5, pushed into the grid scan), joined to the stencil rows that
+    * name them. The tiny stencil side is broadcast so the grid side never
+    * shuffles. The join key is the cell's (time, lat_idx, lon_idx) packed
+    * into one long by [[GatherKey]], so Spark builds a `LongHashedRelation`
+    * and probes it with a long hash, not an UnsafeRow.
+    *
+    * When the grid carries a `tile` partition column (writeGridTiled
+    * layout) the tile folds into the time key. Either way the time key
+    * reads only partition columns, so Dynamic Partition Pruning skips
+    * every untouched `time` (and `tile`) partition: the scan shrinks to
+    * the partitions the stencils touch, the hyperslab-read equivalent,
+    * with no driver-side coordination.
+    *
+    * @param stencil rows with `gtime_t` (a time of `spec.times`), `n_i`,
+    *                `n_j`; cells outside the spec's box match nothing
+    */
+  def gather(stencil: DataFrame, grid: DataFrame, spec: GridSpec,
+             cfg: Config = Config()): DataFrame = {
+    val tiled = grid.columns.contains("tile")
+    val key = GatherKey(spec, Option.when(tiled)(cfg.tileSize))
+    val gridCell = GatherKey.Cell(grid("time"), grid("lat_idx"), grid("lon_idx"),
+      Option.when(tiled)(grid("tile")))
+    val stencilCell = GatherKey.Cell(stencil("gtime_t"), stencil("n_i"), stencil("n_j"))
+    grid
+      .filter(col("depth_idx") < cfg.maxDepthLevels && key.inBox(gridCell))
+      .join(broadcast(stencil.filter(key.inBox(stencilCell))),
+        key.joinOn(gridCell, stencilCell))
   }
 
   /** The grid time axis as an (`t_idx`, `t_val`) local table, the J2

@@ -11,8 +11,8 @@ import graft.io.{TrackIngest, TrackReader}
 class KmzSpec extends SparkSpec {
   import spark.implicits._
 
-  private val kmz = "/root/repo/data/al092016_best_track.kmz"
-  private val goldenCsv = "/root/repo/data/al092016_track.csv"
+  private val kmz = "data/al092016_best_track.kmz"
+  private val goldenCsv = "data/al092016_track.csv"
 
   private lazy val ingested = TrackIngest.readKmz(spark, kmz)
 

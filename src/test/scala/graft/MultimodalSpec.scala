@@ -9,7 +9,7 @@ import graft.ext.Multimodal
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
-  private val kmz = "/root/repo/data/al092016_best_track.kmz"
+  private val kmz = "data/al092016_best_track.kmz"
 
   private lazy val assets =
     Multimodal.readZipAssets(spark, kmz, Seq("png"))

@@ -182,7 +182,7 @@ class Nc3Spec extends SparkSpec {
     Nc3.write(SyntheticGrid.cleanSentinels(grid), spec, ncP,
       packShort = false, recordTime = true)
     GridIngest.Grd1.write(grid, spec, grdP)
-    val track = TrackReader.readNhc(spark, "/root/repo/data/al092016_track.csv")
+    val track = TrackReader.readNhc(spark, "data/al092016_track.csv")
     def profile(df: org.apache.spark.sql.DataFrame) =
       TrackProfile.profile(track, df, spec).collect()
         .map(r => (r.getLong(0), r.getInt(3)) ->
@@ -213,7 +213,7 @@ class Nc3Spec extends SparkSpec {
   }
 
   test("committed fixture ingests (a real .nc file in the repo)") {
-    val fix = "/root/repo/data/hermine_subset.nc"
+    val fix = "data/hermine_subset.nc"
     assert(GridIngest.isNetcdf(fix))
     val df = GridIngest.ingestNc(spark, fix)
     val gs = Nc3.gridSpecOf(fix, Nc3.readHeader(fix))

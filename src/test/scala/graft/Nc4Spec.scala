@@ -278,7 +278,7 @@ class Nc4Spec extends SparkSpec {
     Nc4.write(SyntheticGrid.cleanSentinels(grid), spec, h5P,
       packShort = false, gzip = true)
     GridIngest.Grd1.write(grid, spec, grdP)
-    val track = TrackReader.readNhc(spark, "/root/repo/data/al092016_track.csv")
+    val track = TrackReader.readNhc(spark, "data/al092016_track.csv")
     def profile(df: org.apache.spark.sql.DataFrame) =
       TrackProfile.profile(track, df, spec).collect()
         .map(r => (r.getLong(0), r.getInt(3)) ->

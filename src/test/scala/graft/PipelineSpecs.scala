@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
+import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.sql.functions._
 import graft.fn.GeoFns
 import graft.io.{SyntheticGrid, TrackReader}
@@ -15,25 +18,29 @@ class TrackReaderSpec extends SparkSpec {
 
   test("NHC al092016: 80 rows, first hour 145770, wrapped lon range") {
     import spark.implicits._
-    val df = TrackReader.readNhc(spark, "/root/repo/data/al092016_track.csv").cache()
-    assert(df.count() === 80)
-    val first = df.orderBy($"point_id").limit(1)
-      .select($"hour", $"lat", $"lon").as[(Long, Double, Double)].collect().head
-    assert(first === ((145770L, 12.5, 340.6)))   // -19.4 wrapped
-    val r = df.agg(min($"lon"), max($"lon"), min($"lat"), max($"lat"))
-      .as[(Double, Double, Double, Double)].collect().head
-    assert(r === ((272.0, 340.6, 10.5, 39.6)))
-    assert(df.filter($"lon" < 0).count() === 0)
+    val df = TrackReader.readNhc(spark, "data/al092016_track.csv").cache()
+    // the cache is shared by every suite in this JVM: a later suite that
+    // reads the same file would scan it instead of the reader's plan
+    try {
+      assert(df.count() === 80)
+      val first = df.orderBy($"point_id").limit(1)
+        .select($"hour", $"lat", $"lon").as[(Long, Double, Double)].collect().head
+      assert(first === ((145770L, 12.5, 340.6)))   // -19.4 wrapped
+      val r = df.agg(min($"lon"), max($"lon"), min($"lat"), max($"lat"))
+        .as[(Double, Double, Double, Double)].collect().head
+      assert(r === ((272.0, 340.6, 10.5, 39.6)))
+      assert(df.filter($"lon" < 0).count() === 0)
+    } finally df.unpersist()
   }
 
   test("IBTrACS Hermine (already [0,360)) and Sandy (signed) both parse") {
     import spark.implicits._
     // 13 / 45 data rows — the files lack a trailing newline, so raw
     // line counts (SURVEY.md "12 / 44") undercount by one
-    val hermine = TrackReader.readIbtracs(spark, "/root/repo/data/Hermine_track.csv")
+    val hermine = TrackReader.readIbtracs(spark, "data/Hermine_track.csv")
     assert(hermine.count() === 13)
     assert(hermine.filter($"lon" < 180.0).count() === 0)  // 284.5-ish, untouched
-    val sandy = TrackReader.readIbtracs(spark, "/root/repo/data/Sandy_track.csv")
+    val sandy = TrackReader.readIbtracs(spark, "data/Sandy_track.csv")
     assert(sandy.count() === 45)
     assert(sandy.filter($"lon" < 0).count() === 0)        // wrapped
     assert(sandy.select(min($"lon")).as[Double].collect().head > 270.0)
@@ -45,7 +52,7 @@ class TrackReaderSpec extends SparkSpec {
     // id minting must parallelize per storm (round-1 scale-killer fix:
     // the window partitions by the stable storm serial, never globally)
     val both = TrackReader.readIbtracs(spark,
-      "/root/repo/data/{Hermine_track,Sandy_track}.csv")
+      "data/{Hermine_track,Sandy_track}.csv")
     assert(both.count() === 58) // 13 + 45
     val perStorm = both.groupBy($"stormname")
       .agg(count(lit(1)).as("n"), min($"point_id").as("lo"), max($"point_id").as("hi"))
@@ -65,7 +72,7 @@ class TrackProfileSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("flagship: 80 points × 25 depths = 2000 rows, no sentinels survive") {
     import spark.implicits._
-    val track = TrackReader.readNhc(spark, "/root/repo/data/al092016_track.csv")
+    val track = TrackReader.readNhc(spark, "data/al092016_track.csv")
     val prof = TrackProfile.profile(track, grid, spec).cache()
     assert(prof.count() === 2000)
     assert(prof.select(countDistinct($"point_id")).as[Long].collect().head === 80)
@@ -80,7 +87,7 @@ class TrackProfileSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("IDW answer matches brute-force recomputation for one point") {
     import spark.implicits._
-    val track = TrackReader.readNhc(spark, "/root/repo/data/al092016_track.csv")
+    val track = TrackReader.readNhc(spark, "data/al092016_track.csv")
       .filter($"point_id" === 0)   // (12.5, 340.6) @ hour 145770
     val prof = TrackProfile.profile(track, grid, spec)
       .filter($"depth_idx" === 0)
@@ -111,7 +118,7 @@ class TrackProfileSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("nearest mode returns the snapped cell's analytic value") {
     import spark.implicits._
-    val track = TrackReader.readNhc(spark, "/root/repo/data/al092016_track.csv")
+    val track = TrackReader.readNhc(spark, "data/al092016_track.csv")
       .filter($"point_id" === 10)
     val profNearest = TrackProfile.profile(track, grid, spec,
         TrackProfile.Config(interp = "nearest"))
@@ -143,9 +150,21 @@ class TrackProfileSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(TrackProfile.profile(both, grid, spec).count() === 58 * 25)
   }
 
+  test("unknown interp or distance is rejected, naming the accepted values") {
+    val interp = intercept[IllegalArgumentException](TrackProfile.Config(interp = "nearst"))
+    assert(interp.getMessage.contains("'nearst'") &&
+      interp.getMessage.contains("idw, nearest"), interp.getMessage)
+    val dist = intercept[IllegalArgumentException](TrackProfile.Config(distance = "euclid"))
+    assert(dist.getMessage.contains("'euclid'") &&
+      dist.getMessage.contains("vincenty, haversine"), dist.getMessage)
+    assert(TrackProfile.Config("nearest", "haversine").interp === "nearest")
+  }
+
   test("plan: no nested-loop join, sort aggregate or range exchange; two shuffles; ordered output") {
     val track = TrackReader.readNhc(spark, "data/al092016_track.csv")
-    val prof = TrackProfile.profile(track, grid, spec)
+    val out = java.nio.file.Files.createTempDirectory("gridtime").toString
+    SyntheticGrid.writeGrid(grid, out)
+    val prof = TrackProfile.profile(track, spark.read.parquet(out), spec)
     val keys = prof.collect().toSeq
       .map(r => (r.getAs[Long]("point_id"), r.getAs[Int]("depth_idx")))
     assert(keys.length === 2000)
@@ -157,5 +176,18 @@ class TrackProfileSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the TrackReader id window (by storm) and the IDW aggregate
     val shuffles = collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning.toString }
     assert(shuffles.length === 2, shuffles)
+    // the gather's (time, cell) key packs into one long: a
+    // LongHashedRelation, not an UnsafeRow-keyed one
+    assert(TrackProfileSpec.broadcastKeyTypes(plan) === Seq(Seq(LongType)), plan.toString)
+    // and the time key still prunes the grid's time partitions
+    assert(plan.toString.contains("dynamicpruning"), plan.toString)
   }
+}
+
+object TrackProfileSpec extends AdaptiveSparkPlanHelper {
+
+  /** Key types of every hashed-relation broadcast in an executed plan. */
+  def broadcastKeyTypes(plan: SparkPlan): Seq[Seq[DataType]] =
+    collect(plan) { case b: BroadcastExchangeExec => b.mode }
+      .collect { case m: HashedRelationBroadcastMode => m.key.map(_.dataType) }
 }

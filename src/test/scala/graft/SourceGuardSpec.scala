@@ -5,8 +5,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-tree rules the compiler cannot check: engine code never
-  * depends on the dev tools, and every SparkSession comes from
-  * [[Session]], so the plans Verify checks are the plans Bench times.
+  * depends on the dev tools, every SparkSession comes from [[Session]],
+  * so the plans Verify checks are the plans Bench times, and fixtures are
+  * opened relative to the repository root, so a second checkout reads
+  * its own `data/`.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -37,6 +39,20 @@ class SourceGuardSpec extends AnyFunSuite {
           Some(s"$p builds its own SparkSession (use graft.Session)")
         else None
       tools ++ session
+    }
+    if (offenders.nonEmpty) fail(offenders.mkString("\n"))
+  }
+
+  test("no source names the checkout by an absolute path") {
+    // a string literal that starts with this checkout's absolute path,
+    // or an absolute path into one of the repository's top-level dirs
+    val here = java.util.regex.Pattern.quote(Paths.get("").toAbsolutePath.toString)
+    val absolute = s""""(?:$here|/[^"\\s]*/(?:data|src|perfbench|scripts|plans)/)""".r
+    val offenders = (sources("src/main/scala") ++ sources("src/test/scala")).flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if absolute.findFirstIn(line).isDefined =>
+          s"$p:${i + 1}: absolute checkout path (open fixtures as \"data/...\"): ${line.trim}"
+      }
     }
     if (offenders.nonEmpty) fail(offenders.mkString("\n"))
   }

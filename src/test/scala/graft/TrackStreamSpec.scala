@@ -17,7 +17,7 @@ class TrackStreamSpec extends SparkSpec {
   private lazy val grid =
     SyntheticGrid.cleanSentinels(SyntheticGrid.generate(spark, spec))
   private lazy val track =
-    TrackReader.readNhc(spark, "/root/repo/data/al092016_track.csv")
+    TrackReader.readNhc(spark, "data/al092016_track.csv")
 
   private def profileMap(df: DataFrame): Map[(Long, Int), (Option[Double], Option[Double])] =
     df.select($"point_id", $"depth_idx", $"water_temp", $"salinity")
