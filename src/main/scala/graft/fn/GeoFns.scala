@@ -14,13 +14,6 @@ import org.apache.spark.sql.expressions.UserDefinedFunction
   */
 object GeoFns {
 
-  /** F5: Euclidean distance in degree space,
-    * sqrt((lon1-lon2)^2 + (lat1-lat2)^2) (trackplot_hycom.py:79).
-    * Pure built-ins — stays inside whole-stage codegen.
-    */
-  def euclidDeg(lat1: Column, lon1: Column, lat2: Column, lon2: Column): Column =
-    sqrt(pow(lon1 - lon2, 2) + pow(lat1 - lat2, 2))
-
   /** Haversine great-circle distance in km on a spherical Earth
     * (R = 6371.0088 km, IUGG mean radius). Pure built-ins; differs from
     * Vincenty by <= ~0.5% — use where codegen matters more than geodesic

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic HYCOM-like grid (FIXTURES.md §2).
@@ -122,39 +122,15 @@ object SyntheticGrid {
   /** Write as the engine's canonical grid layout: parquet partitioned by
     * `time` (→ partition pruning replaces the reference's per-experiment
     * OPeNDAP catalog probe, SURVEY.md §2.1 S4/S7), rows sorted by
-    * (lat_idx, lon_idx, depth_idx) within files so parquet row-group
-    * min/max stats make spatial predicates skip row groups.
+    * (lat_idx, lon_idx, depth_idx) within files. Only the `time`
+    * partitions prune: at the default 128 MB parquet block size a smaller
+    * time file (~6 MB for perfbench's 2.1 M-cell profile_fine grid) is one
+    * row group, whose min/max stats span the whole index box.
     */
   def writeGrid(df: DataFrame, path: String): Unit =
     df.repartition(col("time"))
       .sortWithinPartitions("lat_idx", "lon_idx", "depth_idx")
       .write.mode("overwrite")
       .partitionBy("time")
-      .parquet(path)
-
-  /** Spatial tile id for coarse clustering: `tileSize`×`tileSize`
-    * blocks of grid cells, row-major. A track's 3×3 stencils touch a
-    * handful of tiles, so a (time, tile)-partitioned layout +
-    * tile-equality in the gather join lets Dynamic Partition Pruning
-    * skip everything else — the relational equivalent of the
-    * reference's per-point OPeNDAP hyperslab (trackplot_hycom.py:110)
-    * with zero driver-side coordination.
-    */
-  def tileId(latIdx: Column, lonIdx: Column, tileSize: Int): Column =
-    (latIdx / tileSize).cast("int") * TileStride + (lonIdx / tileSize).cast("int")
-
-  /** [[tileId]] = tile row · TileStride + tile column. */
-  final val TileStride = 10000
-
-  /** Time+tile-partitioned layout (see [[tileId]]): the scan-pruning
-    * layout for track-profile workloads. Time-only [[writeGrid]]
-    * remains right for full-field scans (climatologies).
-    */
-  def writeGridTiled(df: DataFrame, path: String, tileSize: Int = 32): Unit =
-    df.withColumn("tile", tileId(col("lat_idx"), col("lon_idx"), tileSize))
-      .repartition(col("time"), col("tile"))
-      .sortWithinPartitions("lat_idx", "lon_idx", "depth_idx")
-      .write.mode("overwrite")
-      .partitionBy("time", "tile")
       .parquet(path)
 }

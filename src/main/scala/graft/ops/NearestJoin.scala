@@ -12,21 +12,16 @@ import org.apache.spark.sql.functions._
   *  - [[snapRegular]]: O(1) arithmetic snap for a regular axis — no
   *    shuffle, no join, pure codegen'd arithmetic. This is the plan that
   *    survives 100 TB: each row computes its own grid index.
-  *  - [[snapByAxis]]: general (irregular axis) broadcast + `min_by`
-  *    argmin. Cost O(N·|axis|) map-side with a tiny broadcast table.
-  *    Because `keyCols` are unique per row the groupBy has no reduction
-  *    to exploit — the full left relation shuffles ONCE (non-key
-  *    columns dragged through `first()`). For wide rows, snap on a
-  *    narrow (key, coord) projection and join back, or prefer
-  *    [[snapRegular]]. Because the two axes are independent the 2-D
-  *    argmin factorizes into two 1-D argmins (never the
-  *    O(N·|grid-cells|) cross join).
+  *  - [[nearest1d]]: general (irregular axis) broadcast sorted axis +
+  *    per-row binary search, O(N·log |axis|). Because the two axes are
+  *    independent the 2-D argmin factorizes into two 1-D argmins (never
+  *    the O(N·|grid-cells|) cross join).
   *
   * Tie semantics: the reference keeps the *first* (lowest-index) argmin
   * on exact ties (strict `<` at trackplot_hycom.py:80); both variants
   * reproduce that deterministically (round-half-DOWN midpoint for the
-  * regular snap — an exact midpoint keeps the lower index; min_by on
-  * (dist, idx) struct for the general one).
+  * regular snap — an exact midpoint keeps the lower index; the lower
+  * key at a midpoint for the binary search).
   */
 object NearestJoin {
 
@@ -47,7 +42,7 @@ object NearestJoin {
 
   /** Big-fact × dim 1-D nearest join via a broadcast SORTED axis +
     * per-row binary search ([[graft.fn.Nearest1dKey]]) — O(N·log m)
-    * with NO shuffle of the fact side at all (vs [[snapByAxis]]'s
+    * with NO shuffle of the fact side at all (vs a cross join's
     * O(N·m) distance evals + full-relation shuffle). The axis is
     * reduced to one row of sorted parallel arrays with a distributed
     * aggregation (duplicate values pre-reduced to their min key, so
@@ -79,36 +74,5 @@ object NearestJoin {
         gb.expression(coord.cast("double")),
         gb.expression(col("__vals")), gb.expression(col("__keys")))))
       .drop("__vals", "__keys")
-  }
-
-  /** General nearest-value snap against an arbitrary (small) axis table.
-    *
-    * @param df       rows to snap (any size — this side is never shuffled
-    *                 beyond the final partial-agg collapse)
-    * @param keyCols  columns uniquely identifying a df row (carried through)
-    * @param coord    the df coordinate column
-    * @param axis     small axis table, columns (`axisIdx`, `axisVal`) —
-    *                 broadcast to every task
-    * @return df columns + `{prefix}_idx`, `{prefix}_snap`
-    */
-  def snapByAxis(df: DataFrame, keyCols: Seq[String], coord: String,
-                 axis: DataFrame, axisIdx: String, axisVal: String,
-                 prefix: String): DataFrame = {
-    val a = broadcast(axis.select(col(axisIdx).as("__aidx"), col(axisVal).as("__aval")))
-    val joined = df.crossJoin(a)
-    val dist = abs(col(coord) - col("__aval"))
-    // first-index tie-break matches the reference's strict `<` argmin
-    val best = min_by(struct(col("__aidx"), col("__aval")), struct(dist, col("__aidx")))
-    joined
-      .groupBy(keyCols.map(col): _*)
-      .agg(
-        best.as("__best"),
-        // non-key df columns survive via first() — keys are unique per row
-        joined.columns
-          .filterNot(c => keyCols.contains(c) || c == "__aidx" || c == "__aval")
-          .map(c => first(col(c)).as(c)): _*)
-      .withColumn(s"${prefix}_idx", col("__best.__aidx"))
-      .withColumn(s"${prefix}_snap", col("__best.__aval"))
-      .drop("__best")
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** J3 stencil / neighborhood-expansion join (SURVEY.md §2.3).
@@ -18,23 +18,20 @@ import org.apache.spark.sql.functions._
   */
 object Stencil {
 
-  /** Literal array of the 9 (di, dj) offsets, row-major. */
-  def offsets3x3: Column = array(
+  /** The 9 (di, dj) offsets of the 3×3 stencil as a literal array,
+    * row-major.
+    */
+  private def offsets = array(
     (for (di <- -1 to 1; dj <- -1 to 1) yield
       struct(lit(di).as("di"), lit(dj).as("dj"))): _*)
 
-  /** Square (2r+1)² stencil for radius r. */
-  def offsetsSquare(r: Int): Column = array(
-    (for (di <- -r to r; dj <- -r to r) yield
-      struct(lit(di).as("di"), lit(dj).as("dj"))): _*)
-
-  /** Expand each row into its stencil neighborhood around
-    * (`iCol`,`jCol`); adds `n_i`, `n_j` neighbor indices, drops
-    * out-of-bounds neighbors given axis sizes.
+  /** Expand each row into its 3×3 neighborhood around (`iCol`,`jCol`);
+    * adds `n_i`, `n_j` neighbor indices, drops out-of-bounds neighbors
+    * given axis sizes.
     */
   def expand(df: DataFrame, iCol: String, jCol: String,
-             ni: Int, nj: Int, radius: Int = 1): DataFrame =
-    df.withColumn("__o", explode(offsetsSquare(radius)))
+             ni: Int, nj: Int): DataFrame =
+    df.withColumn("__o", explode(offsets))
       .withColumn("n_i", col(iCol) + col("__o.di"))
       .withColumn("n_j", col(jCol) + col("__o.dj"))
       .drop("__o")

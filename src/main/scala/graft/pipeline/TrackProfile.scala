@@ -16,11 +16,12 @@ import graft.ops.{AsofJoin, GatherKey, NearestJoin, Stencil, Idw}
   *
   * Scale shape: the track side stays tiny after the stencil expansion
   * (|track|·9 rows) and is BROADCAST into the join against the grid —
-  * the grid (the 100 TB side) is never shuffled; partition pruning on
-  * `time` plus row-group skipping on (lat_idx, lon_idx) reduce the scan
-  * to the touched cells, the relational equivalent of the reference's
-  * per-point OPeNDAP hyperslabs (trackplot_hycom.py:110) without the
-  * per-point round-trips.
+  * the grid (the 100 TB side) is never shuffled. Dynamic Partition
+  * Pruning on the `time` partition column skips every time the track
+  * does not touch; within a touched time the scan reads every cell
+  * (`depth_idx < maxDepthLevels` is the only data-column filter that
+  * drops rows). The reference instead reads one OPeNDAP hyperslab per
+  * point (trackplot_hycom.py:110).
   *
   * Both measures (water_temp + salinity) aggregate in ONE pass — the
   * notebook re-runs the whole pipeline per variable (SURVEY.md §3.2).
@@ -30,12 +31,12 @@ object TrackProfile {
   final case class Config(
       interp: String = "idw",          // "idw" | "nearest" (§2.9 item 4)
       distance: String = "vincenty",   // "vincenty" | "haversine"
-      maxDepthLevels: Int = 25,        // P5 (trackplot_hycom.py:148)
-      tileSize: Int = 32) {            // tile geometry of a tiled grid layout
+      maxDepthLevels: Int = 25) {      // P5 (trackplot_hycom.py:148)
     require(Config.Interps.contains(interp),
       s"unknown interp '$interp': expected one of ${Config.Interps.mkString(", ")}")
     require(Config.Distances.contains(distance),
       s"unknown distance '$distance': expected one of ${Config.Distances.mkString(", ")}")
+    require(maxDepthLevels > 0, s"maxDepthLevels must be positive, got $maxDepthLevels")
   }
 
   object Config {
@@ -47,7 +48,7 @@ object TrackProfile {
     * @param grid   long-format grid (Schemas.gridSchema), sentinels
     *               already cleaned (SyntheticGrid.cleanSentinels)
     * @param spec   the grid's regular-axis geometry (enables the O(1)
-    *               arithmetic snap; snapByAxis covers irregular grids)
+    *               arithmetic snap)
     */
   def profile(track: DataFrame, grid: DataFrame, spec: GridSpec,
               cfg: Config = Config()): DataFrame = {
@@ -115,22 +116,17 @@ object TrackProfile {
     * into one long by [[GatherKey]], so Spark builds a `LongHashedRelation`
     * and probes it with a long hash, not an UnsafeRow.
     *
-    * When the grid carries a `tile` partition column (writeGridTiled
-    * layout) the tile folds into the time key. Either way the time key
-    * reads only partition columns, so Dynamic Partition Pruning skips
-    * every untouched `time` (and `tile`) partition: the scan shrinks to
-    * the partitions the stencils touch, the hyperslab-read equivalent,
-    * with no driver-side coordination.
+    * The time key reads only the `time` partition column, so Dynamic
+    * Partition Pruning skips every untouched `time` partition at scan
+    * time.
     *
     * @param stencil rows with `gtime_t` (a time of `spec.times`), `n_i`,
     *                `n_j`; cells outside the spec's box match nothing
     */
   def gather(stencil: DataFrame, grid: DataFrame, spec: GridSpec,
              cfg: Config = Config()): DataFrame = {
-    val tiled = grid.columns.contains("tile")
-    val key = GatherKey(spec, Option.when(tiled)(cfg.tileSize))
-    val gridCell = GatherKey.Cell(grid("time"), grid("lat_idx"), grid("lon_idx"),
-      Option.when(tiled)(grid("tile")))
+    val key = GatherKey(spec)
+    val gridCell = GatherKey.Cell(grid("time"), grid("lat_idx"), grid("lon_idx"))
     val stencilCell = GatherKey.Cell(stencil("gtime_t"), stencil("n_i"), stencil("n_j"))
     grid
       .filter(col("depth_idx") < cfg.maxDepthLevels && key.inBox(gridCell))
@@ -139,7 +135,7 @@ object TrackProfile {
   }
 
   /** The grid time axis as an (`t_idx`, `t_val`) local table, the J2
-    * right side of [[profile]] and of the streaming profile.
+    * right side of [[profile]].
     */
   def timeAxis(spark: SparkSession, spec: GridSpec): DataFrame =
     spark.createDataFrame(spec.times.zipWithIndex.map { case (t, i) => (i, t) })

@@ -53,30 +53,6 @@ class GridIngestSpec extends SparkSpec {
     }
   }
 
-  test("tiled layout: flagship joins on tile and Dynamic Partition Pruning fires") {
-    import org.apache.spark.sql.functions.col
-    val out = java.nio.file.Files.createTempDirectory("gridtiled").toString
-    graft.io.SyntheticGrid.writeGridTiled(
-      graft.io.SyntheticGrid.cleanSentinels(graft.io.SyntheticGrid.generate(spark, spec)), out)
-    val track = TrackReader.readNhc(spark, "data/al092016_track.csv")
-    val prof = TrackProfile.profile(track, spark.read.parquet(out), spec)
-    // results match the untiled path
-    val untiled = TrackProfile.profile(track,
-      graft.io.SyntheticGrid.cleanSentinels(graft.io.SyntheticGrid.generate(spark, spec)), spec)
-    val rows = prof.collect()
-    assert(rows.length === untiled.count())
-    val a = rows.map(r => Option(r.get(5)).fold(0.0)(_.asInstanceOf[Double])).sum
-    val b = untiled.agg(org.apache.spark.sql.functions.sum(col("water_temp"))).collect().head.getDouble(0)
-    assert(math.abs(a - b) < 1e-6)
-    // once run, the executed plan is AQE's final plan: the tile folds into
-    // the time key, so the gather still probes one long key
-    val plan = prof.queryExecution.executedPlan
-    assert(TrackProfileSpec.broadcastKeyTypes(plan) ===
-      Seq(Seq(org.apache.spark.sql.types.LongType)), plan.toString)
-    // and a DPP subquery prunes the (time, tile) partition columns
-    assert(plan.toString.contains("dynamicpruning"), plan.toString.take(3000))
-  }
-
   test("ingestToParquet: time-partitioned layout prunes partitions") {
     val out = java.nio.file.Files.createTempDirectory("gridpq").toString
     GridIngest.ingestToParquet(spark, grd1Path, out)

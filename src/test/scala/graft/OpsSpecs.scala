@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{AsofJoin, NearestJoin, Stencil, Idw}
 
@@ -115,17 +116,6 @@ class JoinOpsSpec extends SparkSpec {
     assert(got === Seq((0, 10.0), (0, 10.0), (1, 10.4), (75, 40.0), (0, 10.0), (75, 40.0)))
   }
 
-  test("snapByAxis: argmin with first-index tie-break (§7.4 trap 2)") {
-    import spark.implicits._
-    val df = Seq((1L, 5.0), (2L, 7.5), (3L, 100.0)).toDF("id", "x")
-    // axis values 5 and 10: x=7.5 ties → must pick idx 0 (first)
-    val axis = Seq((0, 5.0), (1, 10.0)).toDF("i", "v")
-    val got = NearestJoin.snapByAxis(df, Seq("id"), "x", axis, "i", "v", "g")
-      .select($"id", $"g_idx", $"g_snap").as[(Long, Int, Double)]
-      .collect().sortBy(_._1).toSeq
-    assert(got === Seq((1L, 0, 5.0), (2L, 0, 5.0), (3L, 1, 10.0)))
-  }
-
   test("nearest1d: binary-search join == brute-force (dist, key) argmin, incl. ties") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
@@ -135,13 +125,20 @@ class JoinOpsSpec extends SparkSpec {
       Seq((900L, 3.25), (901L, 3.25))).toDF("k", "v")
     val facts = ((0 until 400).map(i => (i.toLong, rnd.nextDouble() * 12 - 1)) ++
       Seq((1000L, 3.375), (1001L, -50.0), (1002L, 50.0))).toDF("id", "x")
-    val got = NearestJoin.nearest1d(facts, $"x", axis, "k", "v", "nk")
-      .select($"id", $"nk").as[(Long, Long)].collect().toMap
-    val brute = facts.crossJoin(axis)
+    def nearest(facts: DataFrame, axis: DataFrame): Map[Long, Long] =
+      NearestJoin.nearest1d(facts, $"x", axis, "k", "v", "nk")
+        .select($"id", $"nk").as[(Long, Long)].collect().toMap
+    def brute(facts: DataFrame, axis: DataFrame): Map[Long, Long] = facts.crossJoin(axis)
       .groupBy($"id")
       .agg(min_by(struct($"k"), struct(abs($"x" - $"v"), $"k")).getField("k").as("nk"))
       .select($"id", $"nk").as[(Long, Long)].collect().toMap
-    assert(got === brute)
+    assert(nearest(facts, axis) === brute(facts, axis))
+    // axis values 5 and 10: x = 7.5 ties, and the first index wins
+    // (the reference's strict-< argmin, §7.4 trap 2)
+    val pair = Seq((0L, 5.0), (1L, 10.0)).toDF("k", "v")
+    val mid = Seq((1L, 5.0), (2L, 7.5), (3L, 100.0)).toDF("id", "x")
+    assert(nearest(mid, pair) === Map(1L -> 0L, 2L -> 0L, 3L -> 1L))
+    assert(brute(mid, pair) === nearest(mid, pair))
     // plan: no shuffle of the fact side, kernel inside codegen
     val plan = NearestJoin.nearest1d(facts, $"x", axis, "k", "v", "nk")
       .queryExecution.executedPlan.toString

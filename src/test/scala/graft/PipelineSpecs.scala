@@ -157,6 +157,10 @@ class TrackProfileSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val dist = intercept[IllegalArgumentException](TrackProfile.Config(distance = "euclid"))
     assert(dist.getMessage.contains("'euclid'") &&
       dist.getMessage.contains("vincenty, haversine"), dist.getMessage)
+    for (n <- Seq(0, -1)) {
+      val depth = intercept[IllegalArgumentException](TrackProfile.Config(maxDepthLevels = n))
+      assert(depth.getMessage.contains(s"got $n"), depth.getMessage)
+    }
     assert(TrackProfile.Config("nearest", "haversine").interp === "nearest")
   }
 

@@ -1,14 +1,16 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.Trigger
 import graft.io.{SyntheticGrid, TrackReader}
 import graft.pipeline.TrackProfile
 import graft.streaming.TrackStream
 
-/** The flagship pipeline on a STREAM of track fixes: stateless
-  * stream-static formulation must match the batch TrackProfile values.
+/** The flagship pipeline on a STREAM of track fixes: every micro-batch
+  * runs the batch TrackProfile, so the streamed profile must equal the
+  * batch one.
   */
 class TrackStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -19,83 +21,38 @@ class TrackStreamSpec extends SparkSpec {
   private lazy val track =
     TrackReader.readNhc(spark, "data/al092016_track.csv")
 
-  private def profileMap(df: DataFrame): Map[(Long, Int), (Option[Double], Option[Double])] =
-    df.select($"point_id", $"depth_idx", $"water_temp", $"salinity")
-      .as[(Long, Int, Option[Double], Option[Double])]
-      .collect()
-      .map(r => (r._1, r._2) -> ((r._3, r._4)))
-      .toMap
-
-  test("neighborhood index: interior cells carry 9 neighbors, corners 4") {
-    val idx = TrackStream.neighborhoodIndex(grid, spec)
-      .filter($"time" === spec.times.head && $"depth_idx" === 0)
-    val sizes = idx
-      .select($"lat_idx", $"lon_idx", size($"neigh").as("n"))
-      .as[(Int, Int, Int)].collect()
-      .map(r => (r._1, r._2) -> r._3).toMap
-    assert(sizes((0, 0)) === 4)
-    assert(sizes((1, 1)) === 9)
-    assert(sizes((0, 1)) === 6)
-  }
+  private def profileRows(rows: Seq[Row]): Seq[((Long, Int), (Option[Double], Option[Double]))] =
+    rows.map(r => (r.getAs[Long]("point_id"), r.getAs[Int]("depth_idx")) ->
+      ((Option(r.getAs[Any]("water_temp")).map(_.asInstanceOf[Double]),
+        Option(r.getAs[Any]("salinity")).map(_.asInstanceOf[Double]))))
 
   test("streaming profile == batch TrackProfile (IDW, both measures)") {
-    val index = TrackStream.neighborhoodIndex(grid, spec)
-    val batchExpected = profileMap(TrackProfile.profile(track, grid, spec))
+    val batchExpected = profileRows(TrackProfile.profile(track, grid, spec).collect().toSeq).toMap
 
-    // stage the track as files and stream it
+    // stage the track as four files, one micro-batch each
     val dir = java.nio.file.Files.createTempDirectory("trackstream")
       .resolve("fixes").toString
-    track.select($"point_id", $"ts", $"lat", $"lon").write.parquet(dir)
-    val fixes = spark.readStream
-      .schema(track.select($"point_id", $"ts", $"lat", $"lon").schema)
-      .parquet(dir)
-    val q = TrackStream.profile(fixes, index, spec).writeStream
-      .format("memory").queryName("ts_profile")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(180000)
-    val got = profileMap(spark.table("ts_profile"))
+    val cols = track.select($"point_id", $"ts", $"lat", $"lon")
+    cols.repartitionByRange(4, $"point_id").write.parquet(dir)
+    val fixes = spark.readStream.schema(cols.schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir)
 
+    val batches = mutable.Map.empty[Long, Seq[Row]]
+    val q = TrackStream.profile(fixes, grid, spec) { (df: DataFrame, id: Long) =>
+      batches.synchronized(batches(id) = df.collect().toSeq)
+    }.trigger(Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(180000), "stream did not finish")
+
+    assert(batches.size >= 3, s"${batches.size} micro-batches")
+    val got = profileRows(batches.values.flatten.toSeq)
     assert(got.size === 2000)
-    batchExpected.foreach { case (key, (wt, sal)) =>
-      val (gwt, gsal) = got(key)
-      assert(wt.isDefined === gwt.isDefined, key)
+    assert(got.map(_._1).distinct.size === 2000, "duplicate (point_id, depth_idx)")
+    assert(got.map(_._1).toSet === batchExpected.keySet)
+    got.foreach { case (key, (gwt, gsal)) =>
+      val (wt, sal) = batchExpected(key)
+      assert(wt.isDefined === gwt.isDefined && sal.isDefined === gsal.isDefined, key)
       wt.zip(gwt).foreach { case (a, b) => assert(math.abs(a - b) < 1e-9, key) }
       sal.zip(gsal).foreach { case (a, b) => assert(math.abs(a - b) < 1e-9, key) }
     }
-  }
-
-  test("scoped index: exact profile parity at a fraction of the build size (VERDICT r2 item 4)") {
-    val full = TrackStream.neighborhoodIndex(grid, spec)
-    val scoped = TrackStream.neighborhoodIndexScoped(grid, spec, track)
-    // the scoped build covers only what the track touches
-    val fullN = full.count(); val scopedN = scoped.count()
-    assert(scopedN < fullN / 10, s"scoped=$scopedN full=$fullN")
-    // and the profile over it is value-identical for every track fix
-    val a = profileMap(TrackStream.profile(track, full, spec))
-    val b = profileMap(TrackStream.profile(track, scoped, spec))
-    assert(a.size === 2000 && b.size === 2000)
-    a.foreach { case (key, (wt, sal)) =>
-      val (bwt, bsal) = b(key)
-      assert(wt.isDefined === bwt.isDefined && sal.isDefined === bsal.isDefined, key)
-      // collect_list assembles neighbor arrays in partition order, so
-      // the 9-element IDW fold order (and the last ulp) may differ
-      wt.zip(bwt).foreach { case (x, y) => assert(math.abs(x - y) < 1e-9, key) }
-      sal.zip(bsal).foreach { case (x, y) => assert(math.abs(x - y) < 1e-9, key) }
-    }
-  }
-
-  test("scoped index on the tiled layout: partition pruning reaches the grid scan") {
-    val out = java.nio.file.Files.createTempDirectory("tstiled").toString
-    SyntheticGrid.writeGridTiled(grid, out)
-    val tiled = spark.read.parquet(out)
-    val scoped = TrackStream.neighborhoodIndexScoped(tiled, spec, track)
-    val plan = scoped.queryExecution.executedPlan.toString
-    // the (time, tile) semi-join against the broadcast touched set must
-    // prune the file scan via Dynamic Partition Pruning subqueries
-    assert(plan.contains("dynamicpruning"), plan.take(3000))
-    // sanity: the scoped index over the tiled source matches the
-    // in-memory source exactly
-    val mem = TrackStream.neighborhoodIndexScoped(grid, spec, track)
-    assert(scoped.count() === mem.count())
   }
 }
