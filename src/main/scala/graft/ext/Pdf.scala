@@ -5,8 +5,8 @@ import scala.util.control.NonFatal
 
 /** PDF text extraction — a restricted-but-conformant subset of the
   * public PDF specification (ISO 32000-1, distilled from the freely
-  * published Adobe PDF Reference), sized like the repo's WARC/Zarr
-  * readers: real-world structure coverage, bounded-and-total parsing,
+  * published Adobe PDF Reference), sized like the repo's WARC
+  * reader: real-world structure coverage, bounded-and-total parsing,
   * per-row kernel shape (VERDICT r11 item 1).
   *
   * PDFs are a top-3 text source for real LLM training-data pipelines;

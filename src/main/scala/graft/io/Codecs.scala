@@ -5,10 +5,7 @@ package graft.io
   */
 private[graft] object Codecs {
 
-  /** Drains a gzip stream fully (multi-member tolerated by the JDK).
-    * Callers that need an exact-size or surplus guard (the Zarr v2
-    * chunk path) keep their own checked variants.
-    */
+  /** Drains a gzip stream fully (multi-member tolerated by the JDK). */
   def gunzipAll(b: Array[Byte]): Array[Byte] = {
     val in = new java.util.zip.GZIPInputStream(
       new java.io.ByteArrayInputStream(b))

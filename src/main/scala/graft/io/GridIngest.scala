@@ -1,200 +1,62 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.io.SyntheticGrid.GridSpec
 
-/** S4: real grid ingestion — dense 4-D model array → long-format
-  * time-partitioned parquet (SURVEY.md §2.1 S4, §7.2 phase 3).
+/** S4: real grid ingestion — a NetCDF-3 classic 4-D model array →
+  * long-format time-partitioned parquet (SURVEY.md §2.1 S4, §7.2
+  * phase 3).
   *
   * The reference reads a remote netCDF 4-D array via OPeNDAP hyperslab
-  * requests (`trackplot_hycom.py:144,244`). FOUR container formats
-  * feed the same slab/chunk-parallel distribution here, sniffed in
-  * [[ingestToParquet]]:
-  *  - **NetCDF-3 classic** ([[Nc3]], [[ingestNc]]) — the REAL public
-  *    format HYCOM publishes, parsed JDK-only (header + CF
-  *    short-packing + _FillValue);
-  *  - **netCDF-4 / HDF5** ([[Nc4]], [[ingestNc4]]) — chunked/deflated
-  *    layout, chunk-index-parallel;
-  *  - **Zarr v2** ([[Zarr]], [[ingestZarr]]) — the cloud-native
-  *    one-file-per-chunk store, chunk-grid-parallel;
-  *  - **GRD1** ([[ingest]]) — a minimal dense binary layout kept as
-  *    the round-trip fixture format and generator target.
-  *
-  * ==GRD1 layout (big-endian)==
-  * {{{
-  *   magic   "GRD1"                      4 bytes
-  *   nT, nD, nLat, nLon                  4 × int32
-  *   times   nT × int64                  hours since 2000-01-01T00Z
-  *   depths  nD × float64                meters, positive down
-  *   latMin, latStep, lonMin, lonStep    4 × float64
-  *   water_temp  nT·nD·nLat·nLon × float64, row-major [t][d][y][x]
-  *   salinity    nT·nD·nLat·nLon × float64, same order
-  * }}}
-  * Missing cells hold the fill value -30000.0 (netCDF `_FillValue`
-  * convention) and are decoded to SQL null at ingest — NaN never
-  * enters the engine (SURVEY.md §7.4 trap 1).
+  * requests (`trackplot_hycom.py:144,244`). graft reads the same
+  * container from a file: [[Nc3]] parses the NetCDF Classic header
+  * (CDF-1/CDF-2) JDK-only, and [[ingestNc]] decodes CF short-packing
+  * (scale/offset) and `_FillValue` per cell. Missing cells become SQL
+  * null at ingest — NaN never enters the engine (SURVEY.md §7.4 trap 1).
   *
   * ==Scale design==
-  * The file is NOT read as one blob: [[ingest]] reads the small header
-  * driver-side, then `spark.range` over (t, d) slabs fans the byte
-  * ranges out across the cluster — each task seeks directly to its
-  * slab (one contiguous read per variable), the distributed analog of
-  * the reference's per-point hyperslab requests but issued once per
-  * slab instead of 9× per track point. On a cluster the
-  * `RandomAccessFile` becomes any seekable stream (HDFS/S3 ranged
-  * GET); the slab math is unchanged. Output goes through
-  * [[SyntheticGrid.writeGrid]] → parquet partitioned by `time`,
-  * sorted by (lat_idx, lon_idx) within files, so downstream queries
-  * get partition pruning + row-group skipping instead of re-touching
-  * the dense array.
+  * The file is NOT read as one blob: [[ingestNc]] reads the KB-scale
+  * header and axes driver-side, then `spark.range` over (t, d) slabs
+  * fans the byte ranges out across the cluster — each task seeks
+  * directly to its planes (one contiguous read per variable), the
+  * distributed analog of the reference's per-point hyperslab requests
+  * but issued once per slab instead of 9× per track point. On a
+  * cluster the `RandomAccessFile` becomes any seekable stream (HDFS/S3
+  * ranged GET); the slab math is unchanged. [[ingestToParquet]] writes
+  * the result through [[SyntheticGrid.writeGrid]] → parquet partitioned
+  * by `time`, so downstream queries prune partitions instead of
+  * re-touching the dense array.
   */
 object GridIngest {
 
-  val Fill: Double = -30000.0
-  private val Magic = 0x47524431 // "GRD1"
+  /** Upper bound on the ingest's slab tasks. */
+  private val Partitions = 32
 
-  final case class Grd1Header(spec: GridSpec, headerBytes: Long) {
-    def nT: Int = spec.times.size
-    def nD: Int = spec.depths.size
-    def cellsPerSlab: Long = spec.nLat.toLong * spec.nLon
-    def varBlockBytes: Long = nT * nD * cellsPerSlab * 8
-  }
-
-  object Grd1 {
-
-    def readHeader(path: String): Grd1Header = {
-      val in = new java.io.DataInputStream(
-        new java.io.BufferedInputStream(new java.io.FileInputStream(path)))
-      try {
-        require(in.readInt() == Magic, s"$path: not a GRD1 file")
-        val nT = in.readInt(); val nD = in.readInt()
-        val nLat = in.readInt(); val nLon = in.readInt()
-        val times = Seq.fill(nT)(in.readLong())
-        val depths = Seq.fill(nD)(in.readDouble())
-        val latMin = in.readDouble(); val latStep = in.readDouble()
-        val lonMin = in.readDouble(); val lonStep = in.readDouble()
-        val headerBytes = 4L + 4 * 4 + nT * 8L + nD * 8L + 4 * 8L
-        Grd1Header(
-          GridSpec(latMin, latStep, nLat, lonMin, lonStep, nLon, depths, times),
-          headerBytes)
-      } finally in.close()
-    }
-
-    /** Fixture/dev writer: dump a long-format grid DataFrame (the
-      * [[SyntheticGrid]] shape) to GRD1. Driver-side collect — a test
-      * utility for small fixtures, NOT an operator (the engine's sink
-      * is parquet; GRD1 exists to exercise the ingest path).
-      */
-    def write(grid: DataFrame, spec: GridSpec, path: String): Unit = {
-      val nT = spec.times.size; val nD = spec.depths.size
-      val n = nT.toLong * nD * spec.nLat * spec.nLon
-      require(n < Int.MaxValue / 2, "Grd1.write is a small-fixture utility")
-      val temp = Array.fill(n.toInt)(Fill)
-      val sal = Array.fill(n.toInt)(Fill)
-      val tIdx = spec.times.zipWithIndex.toMap
-      grid.select("time", "depth_idx", "lat_idx", "lon_idx", "water_temp", "salinity")
-        .collect()
-        .foreach { r =>
-          val t = tIdx(r.getLong(0)); val d = r.getInt(1)
-          val y = r.getInt(2); val x = r.getInt(3)
-          val off = (((t.toLong * nD + d) * spec.nLat + y) * spec.nLon + x).toInt
-          if (!r.isNullAt(4)) temp(off) = r.getDouble(4)
-          if (!r.isNullAt(5)) sal(off) = r.getDouble(5)
-        }
-      val out = new java.io.DataOutputStream(new java.io.BufferedOutputStream(
-        new java.io.FileOutputStream(path)))
-      try {
-        out.writeInt(Magic)
-        out.writeInt(nT); out.writeInt(nD)
-        out.writeInt(spec.nLat); out.writeInt(spec.nLon)
-        spec.times.foreach(out.writeLong)
-        spec.depths.foreach(out.writeDouble)
-        out.writeDouble(spec.latMin); out.writeDouble(spec.latStep)
-        out.writeDouble(spec.lonMin); out.writeDouble(spec.lonStep)
-        temp.foreach(out.writeDouble)
-        sal.foreach(out.writeDouble)
-      } finally out.close()
-    }
-  }
-
-  /** Ingest a GRD1 file into the long-format grid schema
-    * (Schemas.gridSchema), fill values decoded to null. Slab-parallel:
-    * one task reads one or more contiguous (t, d) planes.
+  /** Ingest a NetCDF-3 classic file (the reference's container —
+    * trackplot_hycom.py:144) into the long-format grid schema
+    * (Schemas.gridSchema). Slab-parallel: each task seeks straight to
+    * its (t, d) planes via [[Nc3.SlabReader]].
     */
-  def ingest(spark: SparkSession, path: String, partitions: Int = 32): DataFrame = {
+  def ingestNc(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val hdr = Grd1.readHeader(path)
-    val spec = hdr.spec
-    val nSlabs = hdr.nT * hdr.nD
-    val slabCells = hdr.cellsPerSlab.toInt
-    val rows = spark.range(0, nSlabs, 1, math.min(partitions, nSlabs))
+    val hdr = Nc3.readHeader(path)
+    val spec = Nc3.gridSpecOf(path, hdr)
+    val nD = spec.depths.size
+    val planeCells = spec.nLat * spec.nLon
+    val tempR = Nc3.slabReaderOf(hdr, hdr.variable("water_temp"), nD, planeCells)
+    val salR = Nc3.slabReaderOf(hdr, hdr.variable("salinity"), nD, planeCells)
+    val times = spec.times; val depths = spec.depths
+    val nLon = spec.nLon
+    val (latMin, latStep, lonMin, lonStep) =
+      (spec.latMin, spec.latStep, spec.lonMin, spec.lonStep)
+    val nSlabs = times.size * nD
+    spark.range(0, nSlabs, 1, math.min(Partitions, nSlabs))
       .as[Long]
       .mapPartitions { slabIds =>
         val raf = new java.io.RandomAccessFile(path, "r")
         // one fd per task — close it when the task ends (success OR
         // failure); without this, fds leak until executor GC and long
         // sessions eventually hit the open-file limit
-        org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](
-          _ => raf.close())
-        val tempBuf = new Array[Byte](slabCells * 8)
-        val salBuf = new Array[Byte](slabCells * 8)
-        slabIds.flatMap { slab =>
-          val t = (slab / hdr.nD).toInt
-          val d = (slab % hdr.nD).toInt
-          val slabOff = slab * slabCells * 8
-          raf.seek(hdr.headerBytes + slabOff)
-          raf.readFully(tempBuf)
-          raf.seek(hdr.headerBytes + hdr.varBlockBytes + slabOff)
-          raf.readFully(salBuf)
-          val tb = java.nio.ByteBuffer.wrap(tempBuf)
-          val sb = java.nio.ByteBuffer.wrap(salBuf)
-          (0 until slabCells).iterator.map { c =>
-            val y = c / spec.nLon
-            val x = c % spec.nLon
-            val wt = tb.getDouble(c * 8)
-            val sa = sb.getDouble(c * 8)
-            (spec.times(t), d, spec.depths(d),
-              y, spec.latMin + y * spec.latStep,
-              x, spec.lonMin + x * spec.lonStep,
-              if (wt == Fill) None else Some(wt),
-              if (sa == Fill) None else Some(sa))
-          }
-        }
-      }
-      .toDF("time", "depth_idx", "depth", "lat_idx", "lat",
-        "lon_idx", "lon", "water_temp", "salinity")
-    rows
-  }
-
-  /** Ingest a NetCDF-3 classic file (the reference's REAL container —
-    * trackplot_hycom.py:144) into the long-format grid schema. Same
-    * slab-parallel distribution as the GRD1 path: the KB-scale header
-    * and axes are parsed driver-side, then each task seeks straight to
-    * its (t, d) planes via [[Nc3.SlabReader]] — CF short-packing
-    * (scale/offset) and `_FillValue` → null are decoded per cell,
-    * exactly what the HYCOM files publish.
-    */
-  def ingestNc(spark: SparkSession, path: String, partitions: Int = 32,
-               tempVar: String = "water_temp",
-               salVar: String = "salinity"): DataFrame = {
-    import spark.implicits._
-    val hdr = Nc3.readHeader(path)
-    val spec = Nc3.gridSpecOf(path, hdr)
-    val nD = spec.depths.size
-    val planeCells = spec.nLat * spec.nLon
-    val tempR = Nc3.slabReaderOf(hdr, hdr.variable(tempVar), nD, planeCells)
-    val salR = Nc3.slabReaderOf(hdr, hdr.variable(salVar), nD, planeCells)
-    val times = spec.times; val depths = spec.depths
-    val nLon = spec.nLon
-    val (latMin, latStep, lonMin, lonStep) =
-      (spec.latMin, spec.latStep, spec.lonMin, spec.lonStep)
-    val nSlabs = times.size * nD
-    spark.range(0, nSlabs, 1, math.min(partitions, nSlabs))
-      .as[Long]
-      .mapPartitions { slabIds =>
-        val raf = new java.io.RandomAccessFile(path, "r")
-        // close the per-task fd at task end (see `ingest` — same leak)
         org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](
           _ => raf.close())
         val tBuf = new Array[Byte](tempR.planeBytes)
@@ -219,235 +81,15 @@ object GridIngest {
         "lon_idx", "lon", "water_temp", "salinity")
   }
 
-  /** Ingest a netCDF-4 / HDF5 file (the container modern HYCOM-style
-    * archives publish — the reference's `netCDF4.Dataset` opens these,
-    * trackplot_hycom.py:144) into the long-format grid schema.
-    *
-    * Distribution unit is the HDF5 CHUNK — the natural one (each chunk
-    * is an independent gzip stream): the driver parses the KB-scale
-    * metadata and chunk index, pairs water_temp/salinity chunks by
-    * logical offset, and fans the pairs out; each task seeks to its
-    * two chunks, inflates, CF-decodes, and emits joined cells. A chunk
-    * absent from the index was never written = all fill → both
-    * measures null (the grid row still exists, as in the Nc3 path).
-    * Contiguous (unfiltered) data vars take the same plane-slab split
-    * as [[ingestNc]].
-    */
-  def ingestNc4(spark: SparkSession, path: String, partitions: Int = 32,
-                tempVar: String = "water_temp",
-                salVar: String = "salinity"): DataFrame = {
-    import spark.implicits._
-    val f = Nc4.readFile(path)
-    val spec = Nc4.gridSpecOf(f)
-    val nD = spec.depths.size
-    val nLon = spec.nLon
-    val times = spec.times; val depths = spec.depths
-    val (latMin, latStep, lonMin, lonStep) =
-      (spec.latMin, spec.latStep, spec.lonMin, spec.lonStep)
-    val tempDs = f.dataset(tempVar); val salDs = f.dataset(salVar)
-    require(tempDs.dims.size == 4 && salDs.dims == tempDs.dims,
-      s"$path: expected matching 4-D (time,depth,lat,lon) data variables")
-    val dims = tempDs.dims
-    val tempDec = Nc4.decoderOf(tempDs); val salDec = Nc4.decoderOf(salDs)
-
-    (tempDs.layout, salDs.layout) match {
-      case (tl: Nc4.Chunked, sl: Nc4.Chunked) =>
-        require(tl.chunkDims == sl.chunkDims,
-          s"$path: $tempVar and $salVar have different chunk shapes")
-        val chunkDims = tl.chunkDims
-        val tempRd = Nc4.chunkReaderOf(tempDs); val salRd = Nc4.chunkReaderOf(salDs)
-        val tempChunks = Nc4.chunkRefs(path, tempDs).map(c => c.offsets -> c).toMap
-        val salChunks = Nc4.chunkRefs(path, salDs).map(c => c.offsets -> c).toMap
-        // every chunk origin of the regular chunk grid (missing from
-        // both indexes = all-fill chunk, still emitted as null cells)
-        val origins = {
-          def axis(d: Int) = 0L until dims(d) by chunkDims(d)
-          for (t <- axis(0); dd <- axis(1); y <- axis(2); x <- axis(3))
-            yield Seq(t, dd, y, x)
-        }
-        val work = origins.map(o => (o, tempChunks.get(o), salChunks.get(o)))
-        val nPart = math.max(1, math.min(partitions, work.size))
-        spark.sparkContext.parallelize(work, nPart)
-          .mapPartitions { it =>
-            val raf = new java.io.RandomAccessFile(path, "r")
-            org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](
-              _ => raf.close())
-            def load(ref: Option[Nc4.ChunkRef], rd: Nc4.ChunkReader): Option[java.nio.ByteBuffer] =
-              ref.map { c =>
-                val b = new Array[Byte](c.storedSize)
-                raf.seek(c.addr); raf.readFully(b)
-                java.nio.ByteBuffer.wrap(rd.decode(b, c.storedSize, c.filterMask))
-              }
-            it.flatMap { case (o, tRef, sRef) =>
-              val tb = load(tRef, tempRd)
-              val sb = load(sRef, salRd)
-              val (ct, cd, cy, cx) = (chunkDims(0), chunkDims(1), chunkDims(2), chunkDims(3))
-              for {
-                it0 <- (0 until ct).iterator; t = o(0) + it0 if t < dims(0)
-                id0 <- 0 until cd; d = o(1) + id0 if d < dims(1)
-                iy <- 0 until cy; y = o(2) + iy if y < dims(2)
-                ix <- 0 until cx; x = o(3) + ix if x < dims(3)
-              } yield {
-                val cell = ((it0 * cd + id0) * cy + iy) * cx + ix
-                (times(t.toInt), d.toInt, depths(d.toInt),
-                  y.toInt, latMin + y * latStep,
-                  x.toInt, lonMin + x * lonStep,
-                  tb.flatMap(b => tempDec.decode(b, cell)),
-                  sb.flatMap(b => salDec.decode(b, cell)))
-              }
-            }
-          }
-          .toDF("time", "depth_idx", "depth", "lat_idx", "lat",
-            "lon_idx", "lon", "water_temp", "salinity")
-
-      case (Nc4.Contiguous(tAddr, _), Nc4.Contiguous(sAddr, _)) =>
-        // plane-slab split, as in the Nc3 path
-        val planeCells = spec.nLat * spec.nLon
-        val tBytesPer = tempDs.dtype.size; val sBytesPer = salDs.dtype.size
-        val nSlabs = times.size * nD
-        spark.range(0, nSlabs, 1, math.min(partitions, nSlabs))
-          .as[Long]
-          .mapPartitions { slabIds =>
-            val raf = new java.io.RandomAccessFile(path, "r")
-            org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](
-              _ => raf.close())
-            val tBuf = new Array[Byte](planeCells * tBytesPer)
-            val sBuf = new Array[Byte](planeCells * sBytesPer)
-            slabIds.flatMap { slab =>
-              val t = (slab / nD).toInt
-              val d = (slab % nD).toInt
-              raf.seek(tAddr + slab * planeCells * tBytesPer); raf.readFully(tBuf)
-              raf.seek(sAddr + slab * planeCells * sBytesPer); raf.readFully(sBuf)
-              val tb = java.nio.ByteBuffer.wrap(tBuf)
-              val sb = java.nio.ByteBuffer.wrap(sBuf)
-              (0 until planeCells).iterator.map { c =>
-                val y = c / nLon
-                val x = c % nLon
-                (times(t), d, depths(d),
-                  y, latMin + y * latStep,
-                  x, lonMin + x * lonStep,
-                  tempDec.decode(tb, c), salDec.decode(sb, c))
-              }
-            }
-          }
-          .toDF("time", "depth_idx", "depth", "lat_idx", "lat",
-            "lon_idx", "lon", "water_temp", "salinity")
-
-      case (tl, sl) => throw new IllegalArgumentException(
-        s"$path: unsupported layout combination $tl / $sl")
-    }
-  }
-
-  /** Magic-byte format sniff: NetCDF classic (`CDF\x01`/`\x02`) or
-    * GRD1.
-    */
-  def isNetcdf(path: String): Boolean = {
-    val in = new java.io.FileInputStream(path)
-    try {
-      val b = new Array[Byte](4); in.read(b)
-      b(0) == 'C' && b(1) == 'D' && b(2) == 'F' && (b(3) == 1 || b(3) == 2)
-    } finally in.close()
-  }
-
-  /** [[Zarr]] grid spec from the store's 1-D coordinate arrays (the
-    * xarray group layout: one array dir per coordinate/data
-    * variable) — same axis conventions as [[Nc4.gridSpecOf]].
-    */
-  def zarrGridSpecOf(path: String,
-                     timeVar: String = "time", depthVar: String = "depth",
-                     latVar: String = "lat", lonVar: String = "lon"): GridSpec = {
-    def coords(v: String): Array[Double] =
-      Zarr.readAll(Zarr.readArrayMeta(s"$path/$v"))
-    SyntheticGrid.specFromAxes(coords(timeVar).map(math.round(_)).toSeq,
-      coords(depthVar).toSeq, coords(latVar), coords(lonVar))
-  }
-
-  /** Zarr-v2-store ingest — the cloud-native sibling of [[ingestNc4]]
-    * with the SAME output shape. The store is already the distribution
-    * layout: one file per chunk, so each task reads only its own
-    * chunk files (no shared seekable handle at all — on object
-    * storage this is one GET per chunk key, which is precisely what
-    * Zarr was designed to make parallel). Chunks missing from the
-    * store are all-fill per the spec and still emit null cells;
-    * fill-valued (or NaN-filled) cells decode to SQL null at ingest,
-    * the engine-wide sentinel rule.
-    */
-  def ingestZarr(spark: SparkSession, path: String, partitions: Int = 32,
-                 tempVar: String = "water_temp",
-                 salVar: String = "salinity"): DataFrame = {
-    import spark.implicits._
-    val tMeta = Zarr.readArrayMeta(s"$path/$tempVar")
-    val sMeta = Zarr.readArrayMeta(s"$path/$salVar")
-    require(tMeta.rank == 4 && sMeta.shape == tMeta.shape,
-      s"$path: expected matching 4-D (time,depth,lat,lon) data variables")
-    require(sMeta.chunks == tMeta.chunks,
-      s"$path: $tempVar and $salVar have different chunk shapes")
-    val spec = zarrGridSpecOf(path)
-    require(tMeta.shape == Seq(spec.times.size.toLong, spec.depths.size.toLong,
-        spec.nLat.toLong, spec.nLon.toLong),
-      s"$path: data shape ${tMeta.shape} does not match coordinate lengths")
-    val times = spec.times; val depths = spec.depths
-    val (latMin, latStep, lonMin, lonStep) =
-      (spec.latMin, spec.latStep, spec.lonMin, spec.lonStep)
-    val dims = tMeta.shape
-    val origins = tMeta.chunkOrigins
-    val nPart = math.max(1, math.min(partitions, origins.size))
-    val tFill = tMeta.fillValue; val sFill = sMeta.fillValue
-    val confBox = Zarr.confBox()
-    spark.sparkContext.parallelize(origins, nPart)
-      .mapPartitions { it =>
-        // chunk GETs go through the Hadoop FileSystem (ConfBox carries
-        // the driver's conf) — one ranged GET per chunk key on object
-        // storage, no shared-POSIX-mount assumption
-        def load(meta: Zarr.ArrayMeta, origin: Seq[Long]): Option[java.nio.ByteBuffer] = {
-          val b = Zarr.chunkBytesOrNull(confBox, meta, origin)
-          if (b == null) None else Some(java.nio.ByteBuffer.wrap(b))
-        }
-        def dec(meta: Zarr.ArrayMeta, fill: Option[Double],
-                buf: Option[java.nio.ByteBuffer], inChunk: Seq[Int]): Option[Double] =
-          buf.flatMap { b =>
-            val v = Zarr.cellValue(meta, b, inChunk)
-            if (v.isNaN || fill.exists(_ == v)) None else Some(v)
-          }
-        it.flatMap { origin =>
-          val tb = load(tMeta, origin)
-          val sb = load(sMeta, origin)
-          val Seq(ct, cd, cy, cx) = tMeta.chunks
-          for {
-            it0 <- (0 until ct).iterator; t = origin(0) + it0 if t < dims(0)
-            id0 <- 0 until cd; d = origin(1) + id0 if d < dims(1)
-            iy <- 0 until cy; y = origin(2) + iy if y < dims(2)
-            ix <- 0 until cx; x = origin(3) + ix if x < dims(3)
-          } yield {
-            val inChunk = Seq(it0, id0, iy, ix)
-            (times(t.toInt), d.toInt, depths(d.toInt),
-              y.toInt, latMin + y * latStep,
-              x.toInt, lonMin + x * lonStep,
-              dec(tMeta, tFill, tb, inChunk), dec(sMeta, sFill, sb, inChunk))
-          }
-        }
-      }
-      .toDF("time", "depth_idx", "depth", "lat_idx", "lat",
-        "lon_idx", "lon", "water_temp", "salinity")
-  }
-
-  /** Full ingestion job: grid file (NetCDF-3 classic, netCDF-4/HDF5,
-    * or GRD1, sniffed by magic) → sentinel cleanup → canonical
-    * time-partitioned parquet grid (ready for TrackProfile).
+  /** Full ingestion job: NetCDF-3 classic file → sentinel cleanup →
+    * canonical time-partitioned parquet grid (ready for TrackProfile).
+    * A file without the `CDF` magic fails in [[Nc3.readHeader]] with
+    * "not a NetCDF classic file".
     */
   def ingestToParquet(spark: SparkSession, gridPath: String,
                       parquetPath: String): GridSpec = {
-    val (spec, df) =
-      if (Zarr.isZarr(gridPath))
-        (zarrGridSpecOf(gridPath), ingestZarr(spark, gridPath))
-      else if (Nc4.isHdf5(gridPath))
-        (Nc4.gridSpecOf(Nc4.readFile(gridPath)), ingestNc4(spark, gridPath))
-      else if (isNetcdf(gridPath)) {
-        val hdr = Nc3.readHeader(gridPath)
-        (Nc3.gridSpecOf(gridPath, hdr), ingestNc(spark, gridPath))
-      } else
-        (Grd1.readHeader(gridPath).spec, ingest(spark, gridPath))
-    SyntheticGrid.writeGrid(SyntheticGrid.cleanSentinels(df), parquetPath)
+    val spec = Nc3.gridSpecOf(gridPath, Nc3.readHeader(gridPath))
+    SyntheticGrid.writeGrid(SyntheticGrid.cleanSentinels(ingestNc(spark, gridPath)), parquetPath)
     spec
   }
 }

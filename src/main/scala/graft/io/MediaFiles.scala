@@ -9,7 +9,7 @@ import org.apache.spark.sql.Dataset
   * `spark.read.format("binaryFile")` ingests back.
   *
   * Write discipline: each task writes its rows to attempt-unique
-  * temp objects and renames into place (the WARC/Zarr sink rule), so
+  * temp objects and renames into place (the WARC sink rule), so
   * a speculative duplicate can never leave a torn file; a rename
   * refused because the winner already committed is verified, never
   * silently dropped. Scale shape: embarrassingly parallel, one
@@ -20,14 +20,15 @@ object MediaFiles {
 
   def write(rows: Dataset[(Long, Array[Byte])], dir: String, ext: String): Unit = {
     val spark = rows.sparkSession
-    val box = new graft.io.Zarr.ConfBox(spark.sparkContext.hadoopConfiguration)
+    val box = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val fsDriver = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fsDriver.mkdirs(dirPath)
     rows.foreachPartition { (it: Iterator[(Long, Array[Byte])]) =>
       if (it.hasNext) {
         val tc = org.apache.spark.TaskContext.get()
-        val fs = dirPath.getFileSystem(box.conf)
+        val fs = dirPath.getFileSystem(box.value)
         it.foreach { case (id, bytes) =>
           val finalPath = new org.apache.hadoop.fs.Path(dir, s"$id.$ext")
           val tmpPath = new org.apache.hadoop.fs.Path(dir,

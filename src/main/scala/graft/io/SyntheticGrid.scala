@@ -34,13 +34,16 @@ object SyntheticGrid {
       depths: Seq[Double] = DefaultDepths,
       times: Seq[Long] = DefaultTimes)
 
-  /** [[GridSpec]] from raw 1-D coordinate axes — the ONE place the
-    * uniform-step validation and axis conventions live (every grid
-    * container reader — netCDF-4, Zarr — derives its spec here, so a
-    * tolerance or convention change cannot silently diverge readers).
+  /** [[GridSpec]] from raw 1-D coordinate axes — the one place the
+    * axis validation lives (every axis non-empty, lat/lon uniform);
+    * [[Nc3.gridSpecOf]] derives a file's spec here.
     */
   def specFromAxes(times: Seq[Long], depths: Seq[Double],
                    lats: Array[Double], lons: Array[Double]): GridSpec = {
+    Seq("time" -> times.size, "depth" -> depths.size,
+      "lat" -> lats.length, "lon" -> lons.length).foreach { case (what, n) =>
+      require(n > 0, s"$what axis is empty")
+    }
     def uniformStep(a: Array[Double], what: String): Double = {
       if (a.length < 2) return 1.0
       val step = a(1) - a(0)

@@ -26,8 +26,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * never materializes in the executor. Reads go through the Hadoop
   * `FileSystem` API (any registered scheme), never a POSIX
   * assumption; the sink writes attempt-unique temp objects renamed on
-  * commit so speculative/retried tasks cannot interleave (the Zarr
-  * sink lesson, ADVICE r8).
+  * commit so speculative/retried tasks cannot interleave (ADVICE r8).
   */
 object Warc {
 
@@ -378,7 +377,7 @@ object Warc {
     require(files.nonEmpty, s"readWarc: no .warc/.warc.gz files match $pattern")
     val nPart = if (parallelism > 0) math.min(parallelism, files.size)
                 else math.min(files.size, spark.sparkContext.defaultParallelism)
-    val box = new graft.io.Zarr.ConfBox(conf)
+    val box = new org.apache.spark.util.SerializableConfiguration(conf)
     spark.createDataset(files).repartition(nPart)
       .mapPartitions { paths =>
         // parseStream closes on clean EOF and on parse failure; the
@@ -391,7 +390,7 @@ object Warc {
         }
         paths.flatMap { f =>
           val hp = new org.apache.hadoop.fs.Path(f)
-          val stream = hp.getFileSystem(box.conf).open(hp)
+          val stream = hp.getFileSystem(box.value).open(hp)
           open.add(stream)
           parseStream(stream, f)
         }
@@ -485,7 +484,8 @@ object Warc {
   def writeWarcGz(rows: Dataset[(String, String, String, Array[Byte])], dir: String,
                   wireVariants: Boolean = false): Unit = {
     val spark = rows.sparkSession
-    val box = new graft.io.Zarr.ConfBox(spark.sparkContext.hadoopConfiguration)
+    val box = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val fsDriver = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fsDriver.mkdirs(dirPath)
@@ -493,7 +493,7 @@ object Warc {
       if (it.hasNext) {
         val tc = org.apache.spark.TaskContext.get()
         val part = tc.partitionId()
-        val fs = dirPath.getFileSystem(box.conf)
+        val fs = dirPath.getFileSystem(box.value)
         val finalPath = new org.apache.hadoop.fs.Path(dir, f"segment-$part%05d.warc.gz")
         val tmpPath = new org.apache.hadoop.fs.Path(dir,
           f".segment-$part%05d.warc.gz.attempt-${tc.taskAttemptId()}")
@@ -538,7 +538,7 @@ object Warc {
           // rename refusal is only legitimate when a speculative twin
           // already committed the identical segment — anything else
           // (permissions, transient store error) must NOT silently
-          // drop this partition's records (the Zarr sink discipline)
+          // drop this partition's records
           require(fs.exists(finalPath),
             s"writeWarcGz: rename $tmpPath -> $finalPath failed with no committed twin")
           fs.delete(tmpPath, false)

@@ -9,13 +9,14 @@ import graft.io.{GridIngest, TrackIngest, TrackReader}
 class NegativePathSpec extends SparkSpec {
   import spark.implicits._
 
-  test("GRD1 reader rejects a non-GRD1 file with a clear error") {
-    val p = java.nio.file.Files.createTempFile("not", ".grd1")
+  test("ingestToParquet rejects a non-NetCDF file with a clear error") {
+    val p = java.nio.file.Files.createTempFile("not", ".nc")
     java.nio.file.Files.write(p, Array.fill[Byte](64)(0x42))
+    val out = java.nio.file.Files.createTempDirectory("notnc").toString
     val e = intercept[IllegalArgumentException] {
-      GridIngest.Grd1.readHeader(p.toString)
+      GridIngest.ingestToParquet(spark, p.toString, out)
     }
-    assert(e.getMessage.contains("not a GRD1 file"))
+    assert(e.getMessage.contains("not a NetCDF classic file"))
   }
 
   test("KMZ ingest of an archive without a .kml entry fails loudly") {
