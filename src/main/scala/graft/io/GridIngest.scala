@@ -89,7 +89,10 @@ object GridIngest {
   def ingestToParquet(spark: SparkSession, gridPath: String,
                       parquetPath: String): GridSpec = {
     val spec = Nc3.gridSpecOf(gridPath, Nc3.readHeader(gridPath))
-    SyntheticGrid.writeGrid(SyntheticGrid.cleanSentinels(ingestNc(spark, gridPath)), parquetPath)
+    // every slice holds the whole lat × lon × depth box: the header gives
+    // the row count, so the cells are not decoded a second time to count
+    SyntheticGrid.writeGrid(SyntheticGrid.cleanSentinels(ingestNc(spark, gridPath)), parquetPath,
+      spec.nLat.toLong * spec.nLon * spec.depths.size)
     spec
   }
 }

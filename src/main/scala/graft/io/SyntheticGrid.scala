@@ -122,18 +122,54 @@ object SyntheticGrid {
     cols.foldLeft(df)((d, c) =>
       d.withColumn(c, when(col(c) > -4.0 && !isnan(col(c)), col(c))))
 
+  /** The fewest rows [[writeGrid]] puts in one file: one vectorized
+    * parquet read batch (`spark.sql.parquet.columnarReaderBatchSize`).
+    */
+  private val MinRowsPerFile = 4096L
+
   /** Write as the engine's canonical grid layout: parquet partitioned by
     * `time` (→ partition pruning replaces the reference's per-experiment
     * OPeNDAP catalog probe, SURVEY.md §2.1 S4/S7), rows sorted by
-    * (lat_idx, lon_idx, depth_idx) within files. Only the `time`
-    * partitions prune: at the default 128 MB parquet block size a smaller
-    * time file (~6 MB for perfbench's 2.1 M-cell profile_fine grid) is one
-    * row group, whose min/max stats span the whole index box.
+    * (lat_idx, lon_idx, depth_idx) within a time.
+    *
+    * Each time slice is cut into `k = defaultParallelism` files of
+    * `⌈rows per slice / k⌉` rows (the writer's `maxRecordsPerFile`), so
+    * the last file of a slice may be up to k − 1 rows short. Each file
+    * holds a contiguous run of the sort order. A DPP-pruned read of one
+    * slice then plans at least k file partitions and keeps every core
+    * busy: Spark never splits a file into pieces smaller than
+    * `openCostInBytes` (4 MB), so a single file of a few MB per slice,
+    * whatever its row groups, would read as one or two uneven tasks. A
+    * file never holds fewer than 4,096 rows (one vectorized batch), so a
+    * tiny grid keeps fewer, fuller files.
+    *
+    * Rows per slice are counted first, over the `time` column alone, so
+    * column pruning keeps the value expressions of [[generate]] out of
+    * that count. Only the `time` partitions prune: each file's min/max
+    * stats still span a band of the index box.
     */
-  def writeGrid(df: DataFrame, path: String): Unit =
+  def writeGrid(df: DataFrame, path: String): Unit = {
+    val k = df.sparkSession.sparkContext.defaultParallelism
+    // k count tasks, not one per input partition: the count reads only
+    // the `time` column, so per-task overhead is most of its cost
+    val perSlice = df.select("time").coalesce(k).groupBy("time").count()
+      .collect().map(_.getLong(1)).foldLeft(0L)(math.max)
+    writeGrid(df, path, perSlice)
+  }
+
+  /** [[writeGrid]] for a caller that already knows the rows of the
+    * largest time slice, so no count runs over `df`.
+    */
+  private[io] def writeGrid(df: DataFrame, path: String, rowsPerSlice: Long): Unit = {
+    val k = df.sparkSession.sparkContext.defaultParallelism
+    val perFile = math.max(MinRowsPerFile, (rowsPerSlice + k - 1) / k)
     df.repartition(col("time"))
-      .sortWithinPartitions("lat_idx", "lon_idx", "depth_idx")
+      // `time` first meets the partitioned writer's required ordering,
+      // so the writer adds no sort of its own
+      .sortWithinPartitions("time", "lat_idx", "lon_idx", "depth_idx")
       .write.mode("overwrite")
+      .option("maxRecordsPerFile", perFile)
       .partitionBy("time")
       .parquet(path)
+  }
 }

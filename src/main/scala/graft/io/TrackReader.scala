@@ -58,19 +58,24 @@ object TrackReader {
 
   /** Shared canonicalization: lon wrap, hour offset, deterministic
     * point_id by time order within each storm (the reference relies on
-    * file order of a single-storm file). The id window is partitioned
-    * by `storm_id` — the stable ATCF number / IBTrACS serial, NOT the
-    * name, which mutates over a storm's life — so a multi-storm feed
-    * parallelizes across storms while each storm's fixes (a few
-    * hundred rows at most) rank inside one bounded partition. A global
-    * `Window.orderBy` would funnel the whole feed through a single
-    * partition — the scale-killer this avoids. point_id is unique per
+    * file order of a single-storm file). The id window is partitioned by
+    * `storm_id` — the stable ATCF number / IBTrACS serial, NOT the name,
+    * which mutates over a storm's life — so ids restart at 0 per storm,
+    * also when one read spans several storm files. point_id is unique per
     * (storm_id, ts); single-storm fixtures get the same 0..N-1 ids the
     * reference's file order implies.
+    *
+    * The window runs over the feed coalesced to one partition. Its
+    * `SinglePartition` output already meets the window's clustering by
+    * `storm_id`, so the plan has no exchange and the numbering costs no
+    * job of its own: in the flagship it runs inside the track side's
+    * broadcast build. A track feed is at most ~10⁵ fixes, which one task
+    * numbers at once.
     */
   private def normalize(df: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("storm_id")).orderBy(col("ts"))
-    df.withColumn("lon", GeoFns.wrapLon360(col("lon")))
+    df.coalesce(1)
+      .withColumn("lon", GeoFns.wrapLon360(col("lon")))
       .withColumn("hour", TimeFns.hoursSince2000(col("ts")))
       .withColumn("point_id", row_number().over(w).cast("long") - 1)
       .select("point_id", "ts", "hour", "lat", "lon", "stormname")

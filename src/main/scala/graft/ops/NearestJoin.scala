@@ -27,15 +27,20 @@ object NearestJoin {
 
   /** Arithmetic snap of `coord` onto the regular axis
     * `origin + i*step, i in [0, n)`: adds `{prefix}_idx` (clamped to the
-    * axis range) and `{prefix}_snap` (the axis value). O(1)/row.
+    * axis range) and `{prefix}_snap` (the axis value). O(1)/row. A null,
+    * NaN or infinite `coord` gets a null index and snap, so the stencil
+    * drops that row instead of profiling the grid corner.
     */
   def snapRegular(df: DataFrame, coord: Column, origin: Double, step: Double,
                   n: Int, prefix: String): DataFrame = {
     // ceil(x - 0.5) = round-half-down: an exact midpoint between two
     // axis nodes snaps to the LOWER index, matching the reference's
-    // strict-< first-argmin tie-break (trackplot_hycom.py:80).
-    val rawIdx = ceil((coord - lit(origin)) / lit(step) - lit(0.5)).cast("int")
-    val idx = least(greatest(rawIdx, lit(0)), lit(n - 1))
+    // strict-< first-argmin tie-break (trackplot_hycom.py:80). The clamp
+    // runs in double before the int cast, which would overflow on a
+    // coordinate far outside the axis.
+    val pos = (coord - lit(origin)) / lit(step) - lit(0.5)
+    val finite = !isnan(coord) && abs(coord) =!= lit(Double.PositiveInfinity)
+    val idx = when(finite, ceil(least(greatest(pos, lit(0.0)), lit(n - 1.0))).cast("int"))
     df.withColumn(s"${prefix}_idx", idx)
       .withColumn(s"${prefix}_snap", lit(origin) + col(s"${prefix}_idx") * lit(step))
   }

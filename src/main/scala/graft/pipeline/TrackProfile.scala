@@ -16,11 +16,17 @@ import graft.ops.{AsofJoin, GatherKey, NearestJoin, Stencil, Idw}
   *
   * Scale shape: the track side stays tiny after the stencil expansion
   * (|track|·9 rows) and is BROADCAST into the join against the grid —
-  * the grid (the 100 TB side) is never shuffled. Dynamic Partition
+  * the grid (the 100 TB side) is never shuffled. The track side has no
+  * exchange either ([[graft.io.TrackReader]] numbers fixes on one
+  * partition), so the IDW aggregate's is the plan's only shuffle, and an
+  * op runs as three jobs: the broadcast build, the scan with the partial
+  * aggregate, and the final aggregate with the sort. Dynamic Partition
   * Pruning on the `time` partition column skips every time the track
   * does not touch; within a touched time the scan reads every cell
   * (`depth_idx < maxDepthLevels` is the only data-column filter that
-  * drops rows). The reference instead reads one OPeNDAP hyperslab per
+  * drops rows). [[graft.io.SyntheticGrid.writeGrid]] writes each slice
+  * as one file per core, so even a single touched slice is scanned by
+  * every core. The reference instead reads one OPeNDAP hyperslab per
   * point (trackplot_hycom.py:110).
   *
   * Both measures (water_temp + salinity) aggregate in ONE pass — the

@@ -282,6 +282,11 @@ class Nc3Spec extends SparkSpec {
     assert(scan.count() === spec.nLat.toLong * spec.nLon * spec.depths.size)
     val plan = scan.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("time"), plan)
+    // writeGrid's layout: one file per core in every time slice
+    for (t <- spec.times) {
+      val files = new java.io.File(out, s"time=$t").list().filter(_.endsWith(".parquet"))
+      assert(files.length === spark.sparkContext.defaultParallelism, files.toSeq)
+    }
   }
 
   test("committed fixture ingests (a real .nc file in the repo)") {

@@ -114,6 +114,14 @@ class JoinOpsSpec extends SparkSpec {
     val got = NearestJoin.snapRegular(df, $"x", 10.0, 0.4, 76, "g")
       .select($"g_idx", $"g_snap").as[(Int, Double)].collect().toSeq
     assert(got === Seq((0, 10.0), (0, 10.0), (1, 10.4), (75, 40.0), (0, 10.0), (75, 40.0)))
+    // far outside the axis: clamped like any out-of-range value, never an
+    // int-cast overflow; null, NaN and ±Inf snap to null, not to cell 0
+    val odd = Seq(Some(1e12), Some(-1e12), Some(Double.NaN), Some(Double.PositiveInfinity),
+      Some(Double.NegativeInfinity), None).toDF("x")
+    val oddGot = NearestJoin.snapRegular(odd, $"x", 10.0, 0.4, 76, "g")
+      .select($"g_idx", $"g_snap").as[(Option[Int], Option[Double])].collect().toSeq
+    assert(oddGot === Seq((Some(75), Some(40.0)), (Some(0), Some(10.0))) ++
+      Seq.fill(4)((None, None)))
   }
 
   test("nearest1d: binary-search join == brute-force (dist, key) argmin, incl. ties") {

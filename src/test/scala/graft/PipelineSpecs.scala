@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.sql.functions._
@@ -14,7 +14,7 @@ import graft.pipeline.TrackProfile
 /** S1 track readers — golden values from the committed fixtures
   * (FIXTURES.md §1).
   */
-class TrackReaderSpec extends SparkSpec {
+class TrackReaderSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("NHC al092016: 80 rows, first hour 145770, wrapped lon range") {
     import spark.implicits._
@@ -60,6 +60,83 @@ class TrackReaderSpec extends SparkSpec {
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     assert(perStorm("HERMINE") === ((13L, 0L, 12L)))  // ids 0..12
     assert(perStorm("SANDY") === ((45L, 0L, 44L)))    // ids 0..44, independent
+  }
+
+  test("NHC read numbers its fixes without an exchange") {
+    import spark.implicits._
+    val df = TrackReader.readNhc(spark, "data/al092016_track.csv")
+    assert(df.select($"point_id").as[Long].collect().sorted.toSeq === (0L until 80L))
+    // the id window runs over one coalesced partition: no shuffle, no job
+    val exchanges = collect(df.queryExecution.executedPlan) { case e: Exchange => e }
+    assert(exchanges.isEmpty, df.queryExecution.executedPlan.toString)
+  }
+}
+
+/** The canonical grid layout [[SyntheticGrid.writeGrid]] writes. */
+class SyntheticGridSpec extends SparkSpec {
+
+  /** Per file of each time slice: (rows, lowest, highest cell-depth
+    * ordinal); the ordinal is a row's position in the
+    * (lat_idx, lon_idx, depth_idx) order of a whole slice.
+    */
+  private def fileRuns(path: String, spec: GridSpec): Map[Long, Seq[(Long, Long, Long)]] = {
+    import spark.implicits._
+    val ord = (col("lat_idx").cast("long") * spec.nLon + col("lon_idx")) *
+      spec.depths.size + col("depth_idx")
+    spark.read.parquet(path).withColumn("ord", ord)
+      .groupBy(col("time"), input_file_name().as("file"))
+      .agg(count(lit(1)).as("n"), min(col("ord")).as("lo"), max(col("ord")).as("hi"))
+      .select(col("time"), col("n"), col("lo"), col("hi"))
+      .as[(Long, Long, Long, Long)].collect().toSeq
+      .groupBy(_._1).map { case (t, fs) => t -> fs.map(f => (f._2, f._3, f._4)).sortBy(_._2) }
+  }
+
+  test("writeGrid: one file per core in each time slice, each a contiguous run of cells") {
+    val spec = SyntheticGrid.hermineSpec(step = 1.0)   // 63,612 rows per time
+    val k = spark.sparkContext.defaultParallelism      // 4 under SparkSpec
+    val perSlice = spec.nLat.toLong * spec.nLon * spec.depths.size
+    val gen = SyntheticGrid.generate(spark, spec)
+    val out = java.nio.file.Files.createTempDirectory("gridfiles").toString
+    SyntheticGrid.writeGrid(gen, out)
+
+    val runs = fileRuns(out, spec)
+    assert(runs.keySet === spec.times.toSet)
+    for ((t, files) <- runs) {
+      assert(files.length === k, s"time $t: $files")
+      val counts = files.map(_._1)
+      assert(counts.max - counts.min <= 1, s"time $t: $counts")
+      // each file is gap-free, and the files tile the slice in order
+      files.foreach { case (n, lo, hi) => assert(hi - lo + 1 === n, s"time $t: $files") }
+      assert(files.map(_._2) === files.map(_._1).scanLeft(0L)(_ + _).init, s"time $t: $files")
+      assert(files.last._3 === perSlice - 1)
+    }
+    // the same rows as the generator
+    val back = spark.read.parquet(out).select(gen.columns.map(col): _*)
+    assert(back.exceptAll(gen).isEmpty && gen.exceptAll(back).isEmpty)
+    // a read of one time slice plans one file partition per core
+    assert(spark.read.parquet(out).filter(col("time") === spec.times.head)
+      .rdd.getNumPartitions === k)
+  }
+
+  test("writeGrid: the last file of a slice is at most k - 1 rows short; tiny slices stay whole") {
+    val spec = SyntheticGrid.hermineSpec(step = 1.0)
+    val k = spark.sparkContext.defaultParallelism
+    // 31 · 73 · 27 = 61,101 rows per time, one more than a multiple of 4
+    val odd = SyntheticGrid.generate(spark, spec).filter(col("lon_idx") < 73)
+    val out = java.nio.file.Files.createTempDirectory("gridodd").toString
+    SyntheticGrid.writeGrid(odd, out)
+    val perFile = (61101L + k - 1) / k
+    for ((t, files) <- fileRuns(out, spec))
+      assert(files.map(_._1) === Seq.fill(k - 1)(perFile) :+ (61101L - (k - 1) * perFile),
+        s"time $t: $files")
+
+    // 7 · 16 · 27 = 3,024 rows per time: under one 4,096-row batch, one file
+    val tiny = SyntheticGrid.hermineSpec(step = 5.0)
+    val tinyOut = java.nio.file.Files.createTempDirectory("gridtiny").toString
+    SyntheticGrid.writeGrid(SyntheticGrid.generate(spark, tiny), tinyOut)
+    val tinyRuns = fileRuns(tinyOut, tiny)
+    assert(tinyRuns.size === tiny.times.size)
+    assert(tinyRuns.values.forall(_.map(_._1) == Seq(3024L)), tinyRuns)
   }
 }
 
@@ -150,6 +227,21 @@ class TrackProfileSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(TrackProfile.profile(both, grid, spec).count() === 58 * 25)
   }
 
+  test("a fix with a NaN or infinite coordinate is dropped; the others profile") {
+    import spark.implicits._
+    // one garbled fix must neither profile the grid corner nor fail the query
+    val track = TrackReader.readNhc(spark, "data/al092016_track.csv")
+      .withColumn("lat", when($"point_id" === 5, lit(Double.NaN)).otherwise($"lat"))
+      .withColumn("lon", when($"point_id" === 6, lit(Double.PositiveInfinity)).otherwise($"lon"))
+    val prof = TrackProfile.profile(track, grid, spec).cache()
+    try {
+      val perPoint = prof.groupBy($"point_id").count().as[(Long, Long)].collect().toMap
+      assert(perPoint.keySet === (0L until 80L).toSet - 5L - 6L)
+      assert(perPoint.values.forall(_ == 25L), perPoint)
+      assert(prof.filter(isnan($"water_temp") || isnan($"salinity")).count() === 0)
+    } finally prof.unpersist()
+  }
+
   test("unknown interp or distance is rejected, naming the accepted values") {
     val interp = intercept[IllegalArgumentException](TrackProfile.Config(interp = "nearst"))
     assert(interp.getMessage.contains("'nearst'") &&
@@ -164,7 +256,7 @@ class TrackProfileSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(TrackProfile.Config("nearest", "haversine").interp === "nearest")
   }
 
-  test("plan: no nested-loop join, sort aggregate or range exchange; two shuffles; ordered output") {
+  test("plan: one shuffle, no nested-loop join, sort aggregate or range exchange") {
     val track = TrackReader.readNhc(spark, "data/al092016_track.csv")
     val out = java.nio.file.Files.createTempDirectory("gridtime").toString
     SyntheticGrid.writeGrid(grid, out)
@@ -177,9 +269,9 @@ class TrackProfileSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val plan = prof.queryExecution.executedPlan
     for (op <- Seq("BroadcastNestedLoopJoin", "SortAggregate", "rangepartitioning"))
       assert(!plan.toString.contains(op), plan.toString)
-    // the TrackReader id window (by storm) and the IDW aggregate
+    // the IDW aggregate's; TrackReader numbers its fixes on one partition
     val shuffles = collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning.toString }
-    assert(shuffles.length === 2, shuffles)
+    assert(shuffles.length === 1, shuffles)
     // the gather's (time, cell) key packs into one long: a
     // LongHashedRelation, not an UnsafeRow-keyed one
     assert(TrackProfileSpec.broadcastKeyTypes(plan) === Seq(Seq(LongType)), plan.toString)
