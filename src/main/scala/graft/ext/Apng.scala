@@ -218,15 +218,4 @@ object Apng {
       y += 1
     }
   }
-
-  /** [[frameFeaturesOrNull]] packed for Catalyst: nested ArrayData, so
-    * the codegen call site stays one static call + null check.
-    */
-  def frameFeaturesArrayDataOrNull(bytes: Array[Byte], nBins: Int, stride: Int,
-                                   maxFrames: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val f = frameFeaturesOrNull(bytes, nBins, stride, maxFrames)
-    if (f == null) null
-    else new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      f.map(r => new org.apache.spark.sql.catalyst.util.GenericArrayData(r): AnyRef))
-  }
 }

@@ -332,15 +332,4 @@ object Gif {
       y += 1
     }
   }
-
-  /** Catalyst packing, same contract as
-    * [[Apng.frameFeaturesArrayDataOrNull]].
-    */
-  def frameFeaturesArrayDataOrNull(bytes: Array[Byte], nBins: Int, stride: Int,
-                                   maxFrames: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val f = frameFeaturesOrNull(bytes, nBins, stride, maxFrames)
-    if (f == null) null
-    else new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      f.map(r => new org.apache.spark.sql.catalyst.util.GenericArrayData(r): AnyRef))
-  }
 }

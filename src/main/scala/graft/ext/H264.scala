@@ -3863,15 +3863,6 @@ object H264 {
     }
   }
 
-  /** [[keyframeFrameFeaturesOrNull]] packed for Catalyst. */
-  def keyframeFrameFeaturesArrayDataOrNull(bytes: Array[Byte], nBins: Int,
-                                           stride: Int, maxFrames: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val f = keyframeFrameFeaturesOrNull(bytes, nBins, stride, maxFrames)
-    if (f == null) null
-    else new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      f.map(r => new org.apache.spark.sql.catalyst.util.GenericArrayData(r): Any))
-  }
-
   /** Keyframe thumbnail on the [[Images]] gray contract. */
   def keyframeThumbOrNull(bytes: Array[Byte], tw: Int, th: Int): Array[Double] = {
     val p = mp4KeyframeLumaOrNull(bytes)

@@ -166,15 +166,4 @@ object Mjpeg {
     }
     if (out.isEmpty) null else out.toArray
   }
-
-  /** [[frameFeaturesOrNull]] packed for Catalyst (the
-    * [[Apng.frameFeaturesArrayDataOrNull]] pattern).
-    */
-  def frameFeaturesArrayDataOrNull(bytes: Array[Byte], nBins: Int, stride: Int,
-                                   maxFrames: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val f = frameFeaturesOrNull(bytes, nBins, stride, maxFrames)
-    if (f == null) null
-    else new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      f.map(r => new org.apache.spark.sql.catalyst.util.GenericArrayData(r): AnyRef))
-  }
 }

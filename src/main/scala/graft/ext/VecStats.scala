@@ -11,11 +11,10 @@ import org.apache.spark.sql.{graftbridge => gb}
   * recipe needs at 100 TB).
   *
   * Scale shape: the WHOLE corpus contributes through ONE aggregate
-  * pass — each row derives its packed upper-triangle outer product
-  * inside the scan span ([[graft.fn.VecOuterUpper]], d(d+1)/2 doubles
-  * for dim d) and [[SimJoin.vecSum]] reduces with map-side partials,
-  * so the driver receives exactly (1 + d + d(d+1)/2) doubles no
-  * matter how many rows flowed. Eigen-decomposition happens on the
+  * pass — each row's packed upper-triangle outer product (d(d+1)/2
+  * doubles for dim d) accumulates into a per-task state with map-side
+  * partials, so the driver receives exactly (1 + d + d(d+1)/2)
+  * doubles no matter how many rows flowed. Eigen-decomposition happens on the
   * driver's d×d matrix (dim-sized model state, same order as any
   * broadcast centroid matrix), and whitening re-enters the plan as a
   * narrow literal-matrix projection: w·(x−μ) = w·x − w·μ with the
@@ -26,10 +25,10 @@ object VecStats {
   /** (n, Σx, Σx⊗x packed upper triangle) in one aggregate job, via
     * the FUSED [[graft.fn.VecMomentsAgg]] — one O(d²) state per task,
     * rows accumulate straight from their ArrayData with no per-row
-    * outer-product materialization (the unfused
-    * `vec_sum(vec_outer_upper(x))` allocated d(d+1)/2 doubles per
-    * row only to reduce them away — 16 KB/row at d = 64, q113's
-    * measured 2.2×-of-oracle cost at sf10). Vectors must be non-null
+    * outer-product materialization (a per-row outer product summed by
+    * a separate aggregate allocates d(d+1)/2 doubles per row only to
+    * reduce them away — 16 KB/row at d = 64, q113's measured
+    * 2.2×-of-oracle cost at sf10). Vectors must be non-null
     * and uniform dim (caller filters; mixed dims fail loudly).
     */
   def moments(df: DataFrame, vecCol: Column): (Long, Array[Double], Array[Double]) = {

@@ -1,9 +1,8 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.AbstractDataType
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.BinaryType
 
 /** Real per-frame video features for animated-PNG payloads as a native
   * Catalyst expression: decodes every frame (inflate + unfilter +
@@ -18,29 +17,13 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
   */
 case class ApngFrameFeatures(child: Expression, nBins: Int = 16,
                              stride: Int = 1, maxFrames: Int = 256)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "apng_frame_features"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    graft.ext.Apng.frameFeaturesArrayDataOrNull(
-      bytes.asInstanceOf[Array[Byte]], nBins, stride, maxFrames)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_f =
-         |  graft.ext.Apng.frameFeaturesArrayDataOrNull($bytes, $nBins, $stride, $maxFrames);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_f;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.rows(graft.ext.Apng, "frameFeaturesOrNull", child, nBins, stride, maxFrames)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

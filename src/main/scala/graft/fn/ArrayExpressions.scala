@@ -13,44 +13,23 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * inserts the `array<float> → array<double>` cast automatically for
   * the raw `embeddings.embedding` column.
   *
-  * Both expressions are nullable beyond their inputs (length mismatch
-  * / null element → null, mirroring the HOF semantics — see the
-  * [[VecKernels]] note), so `nullable` is unconditionally true and the
-  * codegen re-checks the boxed kernel result.
+  * The kernels return a boxed Double: null beyond their inputs
+  * (length mismatch / null element → null, mirroring the HOF
+  * semantics — see the [[VecKernels]] note), so the result is always
+  * nullable.
   */
-abstract class VecBinaryExpression extends BinaryExpression with ImplicitCastInputTypes {
+abstract class VecBinaryExpression extends BinaryExpression
+  with ImplicitCastInputTypes with KernelCall {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  /** Fully-qualified static kernel returning java.lang.Double. */
-  protected def kernel: String
-
-  protected def kernelEval(a: ArrayData, b: ArrayData): java.lang.Double
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    kernelEval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""
-         |java.lang.Double ${ev.value}_r = $kernel($a, $b);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r.doubleValue();
-         |}
-       """.stripMargin)
 }
 
 /** Σ left(i)·right(i), left-to-right — SQL `dot_product`. */
 case class ArrayDotProduct(left: Expression, right: Expression)
   extends VecBinaryExpression {
   override def prettyName: String = "dot_product"
-  override protected def kernel: String = "graft.fn.VecKernels.dotBoxed"
-  override protected def kernelEval(a: ArrayData, b: ArrayData): java.lang.Double =
-    VecKernels.dotBoxed(a, b)
+  override protected def kernel: Expression =
+    Kernel.call(VecKernels, "dotBoxed", DoubleType, left, right)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -60,9 +39,8 @@ case class ArrayDotProduct(left: Expression, right: Expression)
 case class CosineSim(left: Expression, right: Expression)
   extends VecBinaryExpression {
   override def prettyName: String = "cosine_sim"
-  override protected def kernel: String = "graft.fn.VecKernels.cosineBoxed"
-  override protected def kernelEval(a: ArrayData, b: ArrayData): java.lang.Double =
-    VecKernels.cosineBoxed(a, b)
+  override protected def kernel: Expression =
+    Kernel.call(VecKernels, "cosineBoxed", DoubleType, left, right)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -75,28 +53,14 @@ case class CosineSim(left: Expression, right: Expression)
   */
 case class CosineSimQ8(first: Expression, second: Expression, third: Expression)
   extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-  with ImplicitCastInputTypes {
+  with ImplicitCastInputTypes with KernelCall {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType), ArrayType(org.apache.spark.sql.types.IntegerType),
       DoubleType)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "cosine_sim_q8"
 
-  override protected def nullSafeEval(a: Any, q: Any, s: Any): Any =
-    VecKernels.cosineQ8Boxed(a.asInstanceOf[ArrayData], q.asInstanceOf[ArrayData],
-      s.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, q, s) =>
-      s"""
-         |java.lang.Double ${ev.value}_r = graft.fn.VecKernels.cosineQ8Boxed($a, $q, $s);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r.doubleValue();
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(VecKernels, "cosineQ8Boxed", DoubleType, first, second, third)
 
   override protected def withNewChildrenInternal(
       f: Expression, sec: Expression, t: Expression): Expression =
@@ -106,25 +70,12 @@ case class CosineSimQ8(first: Expression, second: Expression, third: Expression)
 /** max(|x|)/127 — the symmetric int8 scale as one compiled pass. */
 case class Int8Scale(child: Expression)
   extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-  with ImplicitCastInputTypes {
+  with ImplicitCastInputTypes with KernelCall {
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "int8_scale"
 
-  override protected def nullSafeEval(v: Any): Any =
-    VecKernels.int8ScaleBoxed(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"""
-         |java.lang.Double ${ev.value}_r = graft.fn.VecKernels.int8ScaleBoxed($v);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r.doubleValue();
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(VecKernels, "int8ScaleBoxed", DoubleType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -134,22 +85,14 @@ case class Int8Scale(child: Expression)
   * identical to the HOF chain the q93/q110 oracles replicate.
   */
 case class QuantizeInt8(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes {
+  extends BinaryExpression with ImplicitCastInputTypes with KernelCall {
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType), DoubleType)
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = true)
-  override def nullable: Boolean = true
   override def prettyName: String = "quantize_int8"
 
-  override protected def nullSafeEval(v: Any, s: Any): Any =
-    VecKernels.quantizeInt8(v.asInstanceOf[ArrayData], s.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, s) =>
-      s"""
-         |${ev.value} = graft.fn.VecKernels.quantizeInt8($v, $s);
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(VecKernels, "quantizeInt8",
+      ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = true), left, right)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -1,10 +1,8 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.AbstractDataType
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** `audio_fingerprint64(content)` — 64-bit perceptual energy-band
   * fingerprint of a WAV/FLAC payload ([[graft.ext.Audio]]: 9 time
@@ -14,28 +12,13 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, 
   * audio detection. Null for undecodable or too-short payloads.
   */
 case class AudioFingerprint64(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
   override def prettyName: String = "audio_fingerprint64"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val h = graft.ext.Audio.fingerprint64OrNull(bytes.asInstanceOf[Array[Byte]])
-    if (h == null) null else h.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |java.lang.Long ${ev.value}_h = graft.ext.Audio.fingerprint64OrNull($bytes);
-         |if (${ev.value}_h == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_h.longValue();
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(graft.ext.Audio, "fingerprint64OrNull", LongType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -47,29 +30,13 @@ case class AudioFingerprint64(child: Expression)
   * `text_profile` for the quality gates (round 14).
   */
 case class AudioProfile(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "audio_profile"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.Audio.profileOrNull(bytes.asInstanceOf[Array[Byte]])
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |double[] ${ev.value}_f = graft.ext.Audio.profileOrNull($bytes);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.doubles(graft.ext.Audio, "profileOrNull", child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -80,19 +47,13 @@ case class AudioProfile(child: Expression)
   * whose profile is id arithmetic; WAV carriage even ids, FLAC odd.
   */
 case class AudioProfileSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "audio_profile_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.AudioFixtures.profileDoc(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.AudioFixtures.profileDoc($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.AudioFixtures, "profileDoc", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

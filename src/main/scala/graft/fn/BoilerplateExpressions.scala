@@ -2,7 +2,6 @@ package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
@@ -15,27 +14,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * an empty page yields an empty array.
   */
 case class JustextBlocks(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = JustextBlocks.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "justext_blocks"
 
-  override protected def nullSafeEval(v: Any): Any =
-    JustextBlocks.blocksData(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, html =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_b =
-         |  graft.fn.JustextBlocks.blocksData($html);
-         |if (${ev.value}_b == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_b;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(JustextBlocks, "blocksData", JustextBlocks.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -69,28 +54,14 @@ object JustextBlocks {
   * the de-boilerplated face of `html_text` for dedup/LM gates.
   */
 case class MainText(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
   override def prettyName: String = "main_text"
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val t = graft.ext.Boilerplate.mainTextOrNull(v.asInstanceOf[UTF8String].toString)
-    if (t == null) null else UTF8String.fromString(t)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, html =>
-      s"""
-         |String ${ev.value}_t = graft.ext.Boilerplate.mainTextOrNull($html.toString());
-         |if (${ev.value}_t == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(${ev.value}_t);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.string(
+      Kernel.call(graft.ext.Boilerplate, "mainTextOrNull", Kernel.Str, Kernel.str(child)))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -101,21 +72,14 @@ case class MainText(child: Expression)
   * parameter is doc_id arithmetic mirrored by the oracle.
   */
 case class JustextSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
   override def prettyName: String = "justext_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    UTF8String.fromString(
-      graft.ext.BoilerplateFixtures.fixtureHtml(id.asInstanceOf[Long]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.ext.BoilerplateFixtures.fixtureHtml($id));")
+  override protected def kernel: Expression =
+    Kernel.string(
+      Kernel.total(graft.ext.BoilerplateFixtures, "fixtureHtml", Kernel.Str, child))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

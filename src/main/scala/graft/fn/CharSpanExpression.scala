@@ -22,29 +22,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * the md5 default exists for DuckDB oracle parity.
   */
 case class CharWindowHashes(child: Expression, L: Int, xx: Boolean = false)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   require(L >= 2, s"window length must be >= 2 chars, got $L")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = if (xx) "char_windows_xx" else "char_windows"
 
-  override protected def nullSafeEval(s: Any): Any =
-    TextKernels.charWindowHashes(s.asInstanceOf[UTF8String], L, xx)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_r =
-         |  graft.fn.TextKernels.charWindowHashes($s, $L, $xx);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(TextKernels, "charWindowHashes",
+      ArrayType(LongType, containsNull = false), child, L, xx)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -327,23 +314,14 @@ case class IslandAgg(
   * own.
   */
 case class StripCharSpans(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with ExpectsInputTypes {
+  extends TernaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(StringType, ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
   override def prettyName: String = "strip_char_spans"
 
-  override protected def nullSafeEval(s: Any, st: Any, en: Any): Any =
-    TextKernels.stripCharSpans(s.asInstanceOf[UTF8String],
-      st.asInstanceOf[ArrayData], en.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, st, en) =>
-      s"""
-         |${ev.value} = graft.fn.TextKernels.stripCharSpans($s, $st, $en);
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(TextKernels, "stripCharSpans", StringType, first, second, third)
 
   override protected def withNewChildrenInternal(
       f: Expression, sec: Expression, t: Expression): Expression =

@@ -2,7 +2,6 @@ package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
@@ -14,27 +13,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * text, code-point count). Null only for null input.
   */
 case class CharsetSniff(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = CharsetSniff.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "charset_sniff"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    CharsetSniff.rowOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.CharsetSniff.rowOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(CharsetSniff, "rowOrNull", CharsetSniff.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -65,33 +50,19 @@ object CharsetSniff {
   * labels fall through to the strict-UTF-8 → windows-1252 sniff.
   * The empty string means "no label" (callers pass
   * `coalesce(label, lit(""))` — the kernel keeps Spark's standard
-  * null-in/null-out inputs so codegen stays on the nullSafe path).
+  * null-in/null-out inputs: a null label is a null row).
   */
 case class CharsetDecode(label: Expression, content: Expression)
   extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with ExpectsInputTypes {
+  with ExpectsInputTypes with KernelCall {
 
   override def left: Expression = label
   override def right: Expression = content
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType, BinaryType)
-  override def dataType: DataType = CharsetSniff.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "charset_decode"
 
-  override protected def nullSafeEval(l: Any, c: Any): Any =
-    CharsetDecode.rowOrNull(l.toString, c.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (l, c) =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.CharsetDecode.rowOrNull($l.toString(), $c);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(CharsetDecode, "rowOrNull", CharsetSniff.Schema, Kernel.str(label), content)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -115,29 +86,15 @@ object CharsetDecode {
   */
 case class CharsetDetect(contentType: Expression, content: Expression)
   extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with ExpectsInputTypes {
+  with ExpectsInputTypes with KernelCall {
 
   override def left: Expression = contentType
   override def right: Expression = content
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType, BinaryType)
-  override def dataType: DataType = CharsetSniff.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "charset_detect"
 
-  override protected def nullSafeEval(ct: Any, c: Any): Any =
-    CharsetDetect.rowOrNull(ct.toString, c.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (ct, c) =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.CharsetDetect.rowOrNull($ct.toString(), $c);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(CharsetDetect, "rowOrNull", CharsetSniff.Schema, Kernel.str(contentType), content)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

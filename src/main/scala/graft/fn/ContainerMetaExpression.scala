@@ -1,7 +1,6 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -37,35 +36,21 @@ object ContainerMetaKernels {
   * + rate/channels. Null for non-EBML payloads.
   */
 case class WebmMeta(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("doc_type", StringType),
-    StructField("duration_sec", DoubleType),
-    StructField("video_codec", StringType),
-    StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false),
-    StructField("audio_codec", StringType),
-    StructField("sample_rate", DoubleType),
-    StructField("channels", LongType, nullable = false)))
-  override def nullable: Boolean = true
   override def prettyName: String = "webm_meta"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    ContainerMetaKernels.webmRowOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.expressions.GenericInternalRow ${ev.value}_r =
-         |  graft.fn.ContainerMetaKernels.webmRowOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(ContainerMetaKernels, "webmRowOrNull", StructType(Seq(
+      StructField("doc_type", StringType),
+      StructField("duration_sec", DoubleType),
+      StructField("video_codec", StringType),
+      StructField("width", LongType, nullable = false),
+      StructField("height", LongType, nullable = false),
+      StructField("audio_codec", StringType),
+      StructField("sample_rate", DoubleType),
+      StructField("channels", LongType, nullable = false))), child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -76,32 +61,18 @@ case class WebmMeta(child: Expression)
   * samples, duration. Null for non-FLAC payloads.
   */
 case class FlacMeta(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("sample_rate", LongType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("bits_per_sample", IntegerType, nullable = false),
-    StructField("total_samples", LongType, nullable = false),
-    StructField("duration_sec", DoubleType)))
-  override def nullable: Boolean = true
   override def prettyName: String = "flac_meta"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    ContainerMetaKernels.flacRowOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.expressions.GenericInternalRow ${ev.value}_r =
-         |  graft.fn.ContainerMetaKernels.flacRowOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(ContainerMetaKernels, "flacRowOrNull", StructType(Seq(
+      StructField("sample_rate", LongType, nullable = false),
+      StructField("channels", IntegerType, nullable = false),
+      StructField("bits_per_sample", IntegerType, nullable = false),
+      StructField("total_samples", LongType, nullable = false),
+      StructField("duration_sec", DoubleType))), child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -138,31 +109,17 @@ object MediaMetaKernels {
   * any decode.  Null for non-ISOBMFF stills.
   */
 case class ImageCodecProfile(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("codec", StringType, nullable = false),
-    StructField("profile", LongType, nullable = false),
-    StructField("bit_depth", LongType, nullable = false),
-    StructField("monochrome", LongType, nullable = false)))
-  override def nullable: Boolean = true
   override def prettyName: String = "image_codec_profile"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    MediaMetaKernels.imageCodecProfileRowOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.expressions.GenericInternalRow ${ev.value}_r =
-         |  graft.fn.MediaMetaKernels.imageCodecProfileRowOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(MediaMetaKernels, "imageCodecProfileRowOrNull", StructType(Seq(
+      StructField("codec", StringType, nullable = false),
+      StructField("profile", LongType, nullable = false),
+      StructField("bit_depth", LongType, nullable = false),
+      StructField("monochrome", LongType, nullable = false))), child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -174,30 +131,16 @@ case class ImageCodecProfile(child: Expression)
   * needs NO decode. Null for unrecognized payloads.
   */
 case class ImageDims(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("width", LongType, nullable = false),
-    StructField("height", LongType, nullable = false)))
-  override def nullable: Boolean = true
   override def prettyName: String = "image_dims"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    MediaMetaKernels.imageDimsRowOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.expressions.GenericInternalRow ${ev.value}_r =
-         |  graft.fn.MediaMetaKernels.imageDimsRowOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(MediaMetaKernels, "imageDimsRowOrNull", StructType(Seq(
+      StructField("format", StringType, nullable = false),
+      StructField("width", LongType, nullable = false),
+      StructField("height", LongType, nullable = false))), child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -209,31 +152,17 @@ case class ImageDims(child: Expression)
   * null when the container can't prove one).
   */
 case class AudioMeta(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("format", StringType, nullable = false),
-    StructField("sample_rate", LongType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("duration_sec", DoubleType)))
-  override def nullable: Boolean = true
   override def prettyName: String = "audio_meta"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    MediaMetaKernels.audioMetaRowOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.expressions.GenericInternalRow ${ev.value}_r =
-         |  graft.fn.MediaMetaKernels.audioMetaRowOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(MediaMetaKernels, "audioMetaRowOrNull", StructType(Seq(
+      StructField("format", StringType, nullable = false),
+      StructField("sample_rate", LongType, nullable = false),
+      StructField("channels", IntegerType, nullable = false),
+      StructField("duration_sec", DoubleType))), child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,9 +1,8 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.AbstractDataType
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.BinaryType
 
 /** Real per-frame video features for GIF payloads ([[graft.ext.Gif]]:
   * LZW decode + palette + interlace + disposal compositing) — the GIF
@@ -13,29 +12,13 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
   */
 case class GifFrameFeatures(child: Expression, nBins: Int = 16,
                             stride: Int = 1, maxFrames: Int = 256)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "gif_frame_features"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    graft.ext.Gif.frameFeaturesArrayDataOrNull(
-      bytes.asInstanceOf[Array[Byte]], nBins, stride, maxFrames)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_f =
-         |  graft.ext.Gif.frameFeaturesArrayDataOrNull($bytes, $nBins, $stride, $maxFrames);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_f;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.rows(graft.ext.Gif, "frameFeaturesOrNull", child, nBins, stride, maxFrames)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,7 +1,6 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -272,19 +271,13 @@ object HtmlKernels {
   * `html_text_full` is the `numericRefs = true` production variant.
   */
 case class HtmlText(child: Expression, numericRefs: Boolean = false)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
   override def prettyName: String = if (numericRefs) "html_text_full" else "html_text"
 
-  override protected def nullSafeEval(v: Any): Any =
-    HtmlKernels.htmlTextOrNull(v.asInstanceOf[UTF8String], numericRefs)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.fn.HtmlKernels.htmlTextOrNull($t, $numericRefs);")
+  override protected def kernel: Expression =
+    Kernel.call(HtmlKernels, "htmlTextOrNull", StringType, child, numericRefs)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

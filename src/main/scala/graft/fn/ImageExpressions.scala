@@ -1,53 +1,26 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.AbstractDataType
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType}
-
-/** Image resize + perceptual fingerprint as native codegen expressions
-  * over [[graft.ext.Images]] (PNG/JPEG routed by content magic; other
-  * payloads → SQL null). Both follow the PngGrayFeatures pattern: one
-  * static call, no ScalaUDF span break.
-  */
-object ImageKernels {
-  /** [[graft.ext.Images.thumbnailOrNull]] packed for Catalyst. */
-  def thumbnailArrayDataOrNull(bytes: Array[Byte], tw: Int,
-                               th: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val t = graft.ext.Images.thumbnailOrNull(bytes, tw, th)
-    if (t == null) null
-    else new org.apache.spark.sql.catalyst.util.GenericArrayData(t)
-  }
-}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** `gray_thumbnail(content, tw, th)` — decode + exact box-filter
-  * RESIZE to a tw×th luminance thumbnail (row-major array<double>).
+  * RESIZE to a tw×th luminance thumbnail (row-major array<double>)
+  * over [[graft.ext.Images]] (PNG/JPEG routed by content magic; other
+  * payloads → SQL null). It and [[ImageDhash64]] follow the
+  * PngGrayFeatures pattern: one static call, no ScalaUDF span break.
   */
 case class GrayThumbnail(child: Expression, tw: Int, th: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   require(tw >= 1 && th >= 1, s"thumbnail dims must be >= 1, got ${tw}x$th")
   require(tw.toLong * th <= (1L << 20), s"thumbnail ${tw}x$th exceeds the 1M-px cap")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "gray_thumbnail"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    ImageKernels.thumbnailArrayDataOrNull(bytes.asInstanceOf[Array[Byte]], tw, th)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_t =
-         |  graft.fn.ImageKernels.thumbnailArrayDataOrNull($bytes, $tw, $th);
-         |if (${ev.value}_t == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_t;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.doubles(graft.ext.Images, "thumbnailOrNull", child, tw, th)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -58,28 +31,13 @@ case class GrayThumbnail(child: Expression, tw: Int, th: Int)
   * near-duplicate image detection.
   */
 case class ImageDhash64(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
   override def prettyName: String = "image_dhash64"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val h = graft.ext.Images.dhash64OrNull(bytes.asInstanceOf[Array[Byte]])
-    if (h == null) null else h.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |java.lang.Long ${ev.value}_h = graft.ext.Images.dhash64OrNull($bytes);
-         |if (${ev.value}_h == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_h.longValue();
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(graft.ext.Images, "dhash64OrNull", LongType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,10 +1,8 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.AbstractDataType
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.BinaryType
 
 /** Real baseline-JPEG luminance features as a native Catalyst
   * expression — [[graft.ext.Jpeg]]: marker parse → Huffman entropy
@@ -15,28 +13,13 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
   * yield SQL null.
   */
 case class JpegGrayFeatures(child: Expression, nBins: Int = 16)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "jpeg_gray_features"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.Jpeg.grayFeaturesOrNull(bytes.asInstanceOf[Array[Byte]], nBins)
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |double[] ${ev.value}_f = graft.ext.Jpeg.grayFeaturesOrNull($bytes, $nBins);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.doubles(graft.ext.Jpeg, "grayFeaturesOrNull", child, nBins)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

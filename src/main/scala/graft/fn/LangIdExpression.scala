@@ -1,9 +1,8 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.AbstractDataType
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType}
 
 /** SQL `lang_id_predict(features)` — the PINNED 9-language classifier
   * as ONE native kernel ([[graft.ext.LangId.predictBoxed]]): all nine
@@ -16,29 +15,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
   * parity with the Column form the SQL oracles replay.
   */
 case class LangIdPredict(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType))
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
   override def prettyName: String = "lang_id_predict"
 
-  override protected def nullSafeEval(f: Any): Any =
-    graft.ext.LangId.predictBoxed(
-      f.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, f =>
-      s"""
-         |org.apache.spark.unsafe.types.UTF8String ${ev.value}_p =
-         |  graft.ext.LangId.predictBoxed($f);
-         |if (${ev.value}_p == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_p;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(graft.ext.LangId, "predictBoxed", StringType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -2,7 +2,6 @@ package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
@@ -12,24 +11,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * entries ([[graft.ext.Manifests.hlsVariantsOrNull]]).
   */
 case class HlsVariants(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = HlsVariants.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "hls_variants"
 
-  override protected def nullSafeEval(v: Any): Any =
-    HlsVariants.data(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_v =
-         |  graft.fn.HlsVariants.data($t);
-         |if (${ev.value}_v == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}_v; }
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(HlsVariants, "data", HlsVariants.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -56,24 +44,13 @@ object HlsVariants {
   * ([[graft.ext.Manifests.hlsSegmentsOrNull]]).
   */
 case class HlsSegments(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = HlsSegments.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "hls_segments"
 
-  override protected def nullSafeEval(v: Any): Any =
-    HlsSegments.data(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_v =
-         |  graft.fn.HlsSegments.data($t);
-         |if (${ev.value}_v == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}_v; }
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(HlsSegments, "data", HlsSegments.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -98,24 +75,13 @@ object HlsSegments {
   * ([[graft.ext.Manifests.mpdRepresentationsOrNull]]).
   */
 case class MpdRepresentations(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = MpdRepresentations.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "mpd_representations"
 
-  override protected def nullSafeEval(v: Any): Any =
-    MpdRepresentations.data(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_v =
-         |  graft.fn.MpdRepresentations.data($t);
-         |if (${ev.value}_v == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}_v; }
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(MpdRepresentations, "data", MpdRepresentations.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -147,40 +113,26 @@ object MpdRepresentations {
   * is doc_id arithmetic mirrored by the oracle.
   */
 case class M3u8Synth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
   override def prettyName: String = "m3u8_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    UTF8String.fromString(graft.ext.ManifestFixtures.m3u8(id.asInstanceOf[Long]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.ext.ManifestFixtures.m3u8($id));")
+  override protected def kernel: Expression =
+    Kernel.string(Kernel.total(graft.ext.ManifestFixtures, "m3u8", Kernel.Str, child))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 case class MpdSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
   override def prettyName: String = "mpd_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    UTF8String.fromString(graft.ext.ManifestFixtures.mpd(id.asInstanceOf[Long]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.ext.ManifestFixtures.mpd($id));")
+  override protected def kernel: Expression =
+    Kernel.string(Kernel.total(graft.ext.ManifestFixtures, "mpd", Kernel.Str, child))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -16,30 +16,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * than n words yield SQL null (the aggregate form emits no row).
   */
 case class MinhashSig(child: Expression, n: Int, k: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   require(n >= 1, s"shingle size must be >= 1, got $n")
   require(k >= 1, s"signature width must be >= 1, got $k")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "minhash_sig"
 
-  override protected def nullSafeEval(s: Any): Any =
-    TextKernels.minhashSig(s.asInstanceOf[UTF8String], n, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_r =
-         |  graft.fn.TextKernels.minhashSig($s, $n, $k);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(TextKernels, "minhashSig", ArrayType(LongType, containsNull = false), child, n, k)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

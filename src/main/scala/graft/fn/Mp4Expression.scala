@@ -1,10 +1,8 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.AbstractDataType
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** ISO BMFF (MP4) container metadata as a native Catalyst expression:
   * `[timescale, duration_sec, n_tracks]` via the JDK-only box walk
@@ -13,28 +11,13 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, 
   * pattern).
   */
 case class Mp4Meta(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "mp4_meta"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.Mp4.metaOrNull(bytes.asInstanceOf[Array[Byte]])
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |double[] ${ev.value}_f = graft.ext.Mp4.metaOrNull($bytes);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.doubles(graft.ext.Mp4, "metaOrNull", child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -47,28 +30,13 @@ case class Mp4Meta(child: Expression)
   * non-BMFF / non-AVC payloads.
   */
 case class Mp4AvcMeta(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "mp4_avc_meta"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.Avc.h264MetaOrNull(bytes.asInstanceOf[Array[Byte]])
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |double[] ${ev.value}_f = graft.ext.Avc.h264MetaOrNull($bytes);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.doubles(graft.ext.Avc, "h264MetaOrNull", child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -82,28 +50,13 @@ case class Mp4AvcMeta(child: Expression)
   * non-BMFF / non-HEVC payloads.
   */
 case class Mp4HevcMeta(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "mp4_hevc_meta"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.Avc.hevcMetaOrNull(bytes.asInstanceOf[Array[Byte]])
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |double[] ${ev.value}_f = graft.ext.Avc.hevcMetaOrNull($bytes);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.doubles(graft.ext.Avc, "hevcMetaOrNull", child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -116,31 +69,15 @@ case class Mp4HevcMeta(child: Expression)
   * no decode.
   */
 case class Mp4SyncOffsets(child: Expression, maxN: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   require(maxN >= 1, s"maxN must be >= 1, got $maxN")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "mp4_sync_offsets"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.Avc.syncOffsetsOrNull(bytes.asInstanceOf[Array[Byte]], maxN)
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |long[] ${ev.value}_f = graft.ext.Avc.syncOffsetsOrNull($bytes, $maxN);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.longs(graft.ext.Avc, "syncOffsetsOrNull", child, maxN)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -155,32 +92,16 @@ case class Mp4SyncOffsets(child: Expression, maxN: Int)
   * subset — the boundary [[graft.ext.H264]] documents.
   */
 case class Mp4KeyframeThumb(child: Expression, tw: Int, th: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   require(tw >= 1 && th >= 1, s"thumbnail dims must be >= 1, got ${tw}x$th")
   require(tw.toLong * th <= (1L << 20), s"thumbnail ${tw}x$th exceeds the 1M-px cap")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "mp4_keyframe_thumb"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.H264.keyframeThumbOrNull(
-      bytes.asInstanceOf[Array[Byte]], tw, th)
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |double[] ${ev.value}_f = graft.ext.H264.keyframeThumbOrNull($bytes, $tw, $th);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.doubles(graft.ext.H264, "keyframeThumbOrNull", child, tw, th)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -193,28 +114,13 @@ case class Mp4KeyframeThumb(child: Expression, tw: Int, th: Int)
   * family (q84/q84p) uses.
   */
 case class Mp4KeyframeDhash64(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def nullable: Boolean = true
   override def prettyName: String = "mp4_keyframe_dhash64"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val h = graft.ext.H264.keyframeDhashOrNull(bytes.asInstanceOf[Array[Byte]])
-    if (h == null) null else h.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |java.lang.Long ${ev.value}_h = graft.ext.H264.keyframeDhashOrNull($bytes);
-         |if (${ev.value}_h == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_h.longValue();
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(graft.ext.H264, "keyframeDhashOrNull", LongType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -226,31 +132,15 @@ case class Mp4KeyframeDhash64(child: Expression)
   * H.264 video into the generic modality-routed feature coalesce.
   */
 case class Mp4KeyframeFeatures(child: Expression, nBins: Int = 16)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   require(nBins >= 1 && nBins <= 4096, s"nBins out of range: $nBins")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "mp4_keyframe_features"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.H264.keyframeFeaturesOrNull(
-      bytes.asInstanceOf[Array[Byte]], nBins)
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |double[] ${ev.value}_f = graft.ext.H264.keyframeFeaturesOrNull($bytes, $nBins);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.doubles(graft.ext.H264, "keyframeFeaturesOrNull", child, nBins)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -266,29 +156,13 @@ case class Mp4KeyframeFeatures(child: Expression, nBins: Int = 16)
   */
 case class H264KeyframeFrames(child: Expression, nBins: Int = 16,
                               stride: Int = 1, maxFrames: Int = 256)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "h264_keyframe_frames"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    graft.ext.H264.keyframeFrameFeaturesArrayDataOrNull(
-      bytes.asInstanceOf[Array[Byte]], nBins, stride, maxFrames)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_f =
-         |  graft.ext.H264.keyframeFrameFeaturesArrayDataOrNull($bytes, $nBins, $stride, $maxFrames);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_f;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.rows(graft.ext.H264, "keyframeFrameFeaturesOrNull", child, nBins, stride, maxFrames)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -308,38 +182,13 @@ case class H264KeyframeFrames(child: Expression, nBins: Int = 16,
   */
 case class H264GopFrames(child: Expression, nBins: Int = 16,
                          stride: Int = 1, maxFrames: Int = 256)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "h264_gop_frames"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.H264.gopFrameFeaturesOrNull(
-      bytes.asInstanceOf[Array[Byte]], nBins, stride, maxFrames)
-    if (f == null) null
-    else new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      f.map(r => new org.apache.spark.sql.catalyst.util.GenericArrayData(r): Any))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val arrCls = "org.apache.spark.sql.catalyst.util.GenericArrayData"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |double[][] ${ev.value}_f = graft.ext.H264.gopFrameFeaturesOrNull($bytes, $nBins, $stride, $maxFrames);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  Object[] ${ev.value}_rows = new Object[${ev.value}_f.length];
-         |  for (int i = 0; i < ${ev.value}_f.length; i++) {
-         |    ${ev.value}_rows[i] = new $arrCls(${ev.value}_f[i]);
-         |  }
-         |  ${ev.value} = new $arrCls(${ev.value}_rows);
-         |}
-       """.stripMargin)
-  }
+  override protected def kernel: Expression =
+    Kernel.rows(graft.ext.H264, "gopFrameFeaturesOrNull", child, nBins, stride, maxFrames)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -350,7 +199,7 @@ case class H264GopFrames(child: Expression, nBins: Int = 16,
   * multi-keyframe index behind any-keyframe video near-dup.
   */
 case class Mp4KeyframeDhashes(child: Expression, maxN: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   // the loud bound lives HERE (analysis time): the kernel's runtime
   // require would be swallowed into a null by the OrNull contract
@@ -358,27 +207,10 @@ case class Mp4KeyframeDhashes(child: Expression, maxN: Int)
     s"maxN must be in [1, 4096], got $maxN")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "mp4_keyframe_dhashes"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.H264.keyframeDhashesOrNull(
-      bytes.asInstanceOf[Array[Byte]], maxN)
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |long[] ${ev.value}_f = graft.ext.H264.keyframeDhashesOrNull($bytes, $maxN);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.longs(graft.ext.H264, "keyframeDhashesOrNull", child, maxN)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -391,19 +223,13 @@ case class Mp4KeyframeDhashes(child: Expression, maxN: Int)
   * id arithmetic mirrored by the q153 oracle.
   */
 case class Mp4MultiRefSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "mp4_multiref_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.VideoFixtures.multiRefGop(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.VideoFixtures.multiRefGop($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.VideoFixtures, "multiRefGop", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -416,19 +242,13 @@ case class Mp4MultiRefSynth(child: Expression)
   * the q154 oracle.
   */
 case class Mp4BGopSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "mp4_bgop_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.VideoFixtures.bGop(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.VideoFixtures.bGop($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.VideoFixtures, "bGop", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -440,19 +260,13 @@ case class Mp4BGopSynth(child: Expression)
   * bi weights. Parameters are id arithmetic mirrored by the oracle.
   */
 case class Mp4WGopSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "mp4_wgop_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.VideoFixtures.wGopMp4(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.VideoFixtures.wGopMp4($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.VideoFixtures, "wGopMp4", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -464,19 +278,13 @@ case class Mp4WGopSynth(child: Expression)
   * layout cycling by id). Decoded features must equal q153's.
   */
 case class Mp4Fmp4Synth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "mp4_fmp4_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.VideoFixtures.multiRefGopFragmented(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.VideoFixtures.multiRefGopFragmented($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.VideoFixtures, "multiRefGopFragmented", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -488,32 +296,16 @@ case class Mp4Fmp4Synth(child: Expression)
   * mid-GOP shares no keyframe with its source but shares frames).
   */
 case class H264GopDhashes(child: Expression, maxN: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   require(maxN >= 1 && maxN <= (1 << 12),
     s"maxN must be in [1, 4096], got $maxN")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "h264_gop_dhashes"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.H264.gopDhashesOrNull(bytes.asInstanceOf[Array[Byte]], maxN)
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |long[] ${ev.value}_f = graft.ext.H264.gopDhashesOrNull($bytes, $maxN);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.longs(graft.ext.H264, "gopDhashesOrNull", child, maxN)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -526,19 +318,13 @@ case class H264GopDhashes(child: Expression, maxN: Int)
   * pts_ms feature differs from the decode timeline.
   */
 case class Mp4BGopPtsSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "mp4_bgop_pts_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.VideoFixtures.bGopPts(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.VideoFixtures.bGopPts($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.VideoFixtures, "bGopPts", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -552,19 +338,13 @@ case class Mp4BGopPtsSynth(child: Expression)
   * oracle.
   */
 case class Mp4ElstSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "mp4_elst_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.VideoFixtures.bGopElst(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.VideoFixtures.bGopElst($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.VideoFixtures, "bGopElst", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -579,41 +359,17 @@ case class Mp4ElstSynth(child: Expression)
   */
 case class H264ClipFrames(child: Expression, nBins: Int, everyMs: Double,
                           maxN: Int, maxFrames: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   require(nBins >= 1 && everyMs > 0 && maxN >= 1 && maxN <= (1 << 12) &&
     maxFrames >= 1 && maxFrames <= (1 << 12),
     s"invalid clip-sampling bounds ($nBins, $everyMs, $maxN, $maxFrames)")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType =
-    ArrayType(ArrayType(DoubleType, containsNull = false), containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "h264_clip_frames"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.H264.clipFrameFeaturesOrNull(
-      bytes.asInstanceOf[Array[Byte]], nBins, everyMs, maxN, maxFrames)
-    if (f == null) null
-    else new GenericArrayData(f.map(r => new GenericArrayData(r): Any))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val arrCls = "org.apache.spark.sql.catalyst.util.GenericArrayData"
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |double[][] ${ev.value}_f = graft.ext.H264.clipFrameFeaturesOrNull($bytes, $nBins, $everyMs, $maxN, $maxFrames);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  Object[] ${ev.value}_rows = new Object[${ev.value}_f.length];
-         |  for (int i = 0; i < ${ev.value}_f.length; i++) {
-         |    ${ev.value}_rows[i] = new $arrCls(${ev.value}_f[i]);
-         |  }
-         |  ${ev.value} = new $arrCls(${ev.value}_rows);
-         |}
-       """.stripMargin)
-  }
+  override protected def kernel: Expression =
+    Kernel.rows(graft.ext.H264, "clipFrameFeaturesOrNull", child, nBins, everyMs, maxN, maxFrames)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -629,28 +385,13 @@ case class H264ClipFrames(child: Expression, nBins: Int, everyMs: Double,
   * track.
   */
 case class Av1Meta(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "av1_meta"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.Av1.metaOrNull(bytes.asInstanceOf[Array[Byte]])
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |double[] ${ev.value}_f = graft.ext.Av1.metaOrNull($bytes);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.doubles(graft.ext.Av1, "metaOrNull", child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -663,19 +404,13 @@ case class Av1Meta(child: Expression)
   * oracle.
   */
 case class Av1Synth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "av1_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.Av1Fixtures.doc(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.Av1Fixtures.doc($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.Av1Fixtures, "doc", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -687,19 +422,13 @@ case class Av1Synth(child: Expression)
   * graded on the crawl-dominant image carriage alone.
   */
 case class AvifSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "avif_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.Av1Fixtures.avif(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.Av1Fixtures.avif($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.Av1Fixtures, "avif", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

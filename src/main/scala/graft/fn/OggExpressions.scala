@@ -2,7 +2,6 @@ package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
@@ -13,19 +12,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * corpus; the q137 pattern).
   */
 case class OggSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "ogg_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.OggFixtures.stream(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.OggFixtures.stream($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.OggFixtures, "stream", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -41,27 +34,13 @@ case class OggSynth(child: Expression)
   * well-formed single-stream Ogg Vorbis/Opus container.
   */
 case class OggStreamMeta(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = OggStreamMeta.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "ogg_stream_meta"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    OggStreamMeta.metaOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.OggStreamMeta.metaOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(OggStreamMeta, "metaOrNull", OggStreamMeta.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -76,27 +55,13 @@ case class OggStreamMeta(child: Expression)
   * Ogg VORBIS container (Opus has no Vorbis setup).
   */
 case class VorbisSetupStats(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = VorbisSetupStats.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "vorbis_setup_stats"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    VorbisSetupStats.statsOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.VorbisSetupStats.statsOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(VorbisSetupStats, "statsOrNull", VorbisSetupStats.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -152,27 +117,13 @@ object VorbisSetupStats {
   * spec declares undecodable.
   */
 case class VorbisSetupFull(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = VorbisSetupFull.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "vorbis_setup_full"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    VorbisSetupFull.statsOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.VorbisSetupFull.statsOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(VorbisSetupFull, "statsOrNull", VorbisSetupFull.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -277,36 +228,20 @@ object OggStreamMeta {
   * flag and breaks the hash.
   */
 case class WebmVorbisAgree(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "webm_vorbis_agree"
 
-  override protected def nullSafeEval(id: Any): Any = {
-    val r = WebmVorbisAgree.eval(id.asInstanceOf[Long])
-    if (r == null) null
-    else new org.apache.spark.sql.catalyst.util.GenericArrayData(r)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"""
-         |long[] ${ev.value}_r = graft.fn.WebmVorbisAgree.eval($id);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_r);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.longs(WebmVorbisAgree, "agreement", child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 object WebmVorbisAgree {
-  def eval(id: Long): Array[Long] = {
+  def agreement(id: Long): Array[Long] = {
     val ogg = graft.ext.VorbisPcmFixtures.stream(id)
     val pages = graft.ext.Ogg.pagesOrNull(ogg)
     if (pages == null) return null
@@ -337,19 +272,13 @@ object WebmVorbisAgree {
 }
 
 case class VorbisPcmSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "vorbis_pcm_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.VorbisPcmFixtures.stream(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.VorbisPcmFixtures.stream($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.VorbisPcmFixtures, "stream", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -367,27 +296,13 @@ case class VorbisPcmSynth(child: Expression)
   * container.
   */
 case class VorbisPcmStats(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = VorbisPcmStats.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "vorbis_pcm_stats"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    VorbisPcmStats.statsOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.VorbisPcmStats.statsOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(VorbisPcmStats, "statsOrNull", VorbisPcmStats.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -2,7 +2,6 @@ package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
@@ -12,19 +11,13 @@ import org.apache.spark.sql.types._
   * corpus; the q137/q138 pattern).
   */
 case class OpusSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "opus_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.OpusFixtures.stream(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.OpusFixtures.stream($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.OpusFixtures, "stream", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -41,27 +34,13 @@ case class OpusSynth(child: Expression)
   * Opus stream.
   */
 case class OpusTocStats(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = OpusTocStats.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "opus_toc_stats"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    OpusTocStats.statsOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.OpusTocStats.statsOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(OpusTocStats, "statsOrNull", OpusTocStats.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -2,7 +2,6 @@ package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
@@ -13,19 +12,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * OggSynth pattern).
   */
 case class PdfSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "pdf_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.PdfFixtures.pdf(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.PdfFixtures.pdf($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.PdfFixtures, "pdf", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -40,27 +33,13 @@ case class PdfSynth(child: Expression)
   * malformed, encrypted, unsupported filter. Never throws.
   */
 case class PdfTextStats(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = PdfTextStats.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "pdf_text"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    PdfTextStats.rowOrNull(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.PdfTextStats.rowOrNull($bytes);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(PdfTextStats, "rowOrNull", PdfTextStats.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

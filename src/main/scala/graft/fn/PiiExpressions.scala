@@ -2,7 +2,6 @@ package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
@@ -208,31 +207,17 @@ object PiiKernels {
 
 /** `pii_scan(text)` → struct(n_email, n_ipv4, n_phone, redacted). */
 case class PiiScan(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = StructType(Seq(
-    StructField("n_email", LongType, nullable = false),
-    StructField("n_ipv4", LongType, nullable = false),
-    StructField("n_phone", LongType, nullable = false),
-    StructField("redacted", StringType, nullable = false)))
-  override def nullable: Boolean = true
   override def prettyName: String = "pii_scan"
 
-  override protected def nullSafeEval(v: Any): Any =
-    PiiKernels.scanOrNull(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.PiiKernels.scanOrNull($t);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(PiiKernels, "scanOrNull", StructType(Seq(
+      StructField("n_email", LongType, nullable = false),
+      StructField("n_ipv4", LongType, nullable = false),
+      StructField("n_phone", LongType, nullable = false),
+      StructField("redacted", StringType, nullable = false))), child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,10 +1,9 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.AbstractDataType
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Normal-equation solver kernel behind [[graft.ops.Polyfit]]:
   * given power moments S₀…S₂d and right-hand side T₀…T_d, solve the
@@ -62,28 +61,14 @@ object PolyfitKernel {
   * post-aggregation projection's codegen span.
   */
 case class PolyfitSolve(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes {
+  extends BinaryExpression with ImplicitCastInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(DoubleType), ArrayType(DoubleType))
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "polyfit_solve"
 
-  override protected def nullSafeEval(m: Any, t: Any): Any =
-    PolyfitKernel.solve(m.asInstanceOf[ArrayData], t.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (m, t) =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_r =
-         |  graft.fn.PolyfitKernel.solve($m, $t);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(PolyfitKernel, "solve", ArrayType(DoubleType, containsNull = false), left, right)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -1,10 +1,8 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-row Gopher repetition signals as a native codegen expression —
   * SQL `repetition_profile(text)`. One
@@ -18,27 +16,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * kernel (Rae et al. 2021 Table A1 lineage).
   */
 case class RepetitionProfile(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = RepetitionProfile.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "repetition_profile"
 
-  override protected def nullSafeEval(s: Any): Any =
-    TextKernels.repetitionProfile(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"""
-         |org.apache.spark.sql.catalyst.InternalRow ${ev.value}_r =
-         |  graft.fn.TextKernels.repetitionProfile($s);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(TextKernels, "repetitionProfile", RepetitionProfile.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

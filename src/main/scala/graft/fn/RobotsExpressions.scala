@@ -1,10 +1,8 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** robots.txt (RFC 9309, the Robots Exclusion Protocol) evaluation —
   * the politeness decision a crawl-frontier pipeline applies per
@@ -179,30 +177,19 @@ object RobotsKernels {
     }
     out.toSeq
   }
-
-  def allowedOrNull(robots: UTF8String, agent: UTF8String, path: UTF8String): Any =
-    if (robots == null || agent == null || path == null) null
-    else isAllowed(robots.toString, agent.toString, path.toString)
 }
 
 /** `robots_allowed(robots_txt, agent, path)` → boolean. */
 case class RobotsAllowed(first: Expression, second: Expression, third: Expression)
-  extends TernaryExpression with ExpectsInputTypes {
+  extends TernaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(StringType, StringType, StringType)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
   override def prettyName: String = "robots_allowed"
 
-  override protected def nullSafeEval(r: Any, a: Any, p: Any): Any =
-    RobotsKernels.isAllowed(r.asInstanceOf[UTF8String].toString,
-      a.asInstanceOf[UTF8String].toString, p.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (r, a, p) =>
-      s"""${ev.value} = graft.fn.RobotsKernels.isAllowed(
-         |  $r.toString(), $a.toString(), $p.toString());""".stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(RobotsKernels, "isAllowed", BooleanType,
+      Kernel.str(first), Kernel.str(second), Kernel.str(third))
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =

@@ -2,7 +2,6 @@ package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
@@ -14,21 +13,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * oracle.
   */
 case class SubtitleSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = false
   override def prettyName: String = "subtitle_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    UTF8String.fromString(
-      graft.ext.SubtitleFixtures.doc(id.asInstanceOf[Long]))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"""${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(
-         |  graft.ext.SubtitleFixtures.doc($id));""".stripMargin)
+  override protected def kernel: Expression =
+    Kernel.string(Kernel.total(graft.ext.SubtitleFixtures, "doc", Kernel.Str, child))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -42,27 +33,13 @@ case class SubtitleSynth(child: Expression)
   * / dedup gates as any document.
   */
 case class SubtitleCues(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = SubtitleCues.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "subtitle_cues"
 
-  override protected def nullSafeEval(text: Any): Any =
-    SubtitleCues.cuesData(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, text =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_c =
-         |  graft.fn.SubtitleCues.cuesData($text);
-         |if (${ev.value}_c == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_c;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(SubtitleCues, "cuesData", SubtitleCues.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -88,19 +65,13 @@ object SubtitleCues {
   * fragmented CMAF segments on odd).
   */
 case class Mp4SubtitleSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "mp4_subtitle_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.SubtitleFixtures.wvttMp4(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.SubtitleFixtures.wvttMp4($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.SubtitleFixtures, "wvttMp4", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -114,27 +85,13 @@ case class Mp4SubtitleSynth(child: Expression)
   * standalone subtitles land identically in the text pipeline.
   */
 case class Mp4SubtitleCues(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = SubtitleCues.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "mp4_subtitle_cues"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    Mp4SubtitleCues.cuesData(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_c =
-         |  graft.fn.Mp4SubtitleCues.cuesData($bytes);
-         |if (${ev.value}_c == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_c;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(Mp4SubtitleCues, "cuesData", SubtitleCues.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -157,19 +114,13 @@ object Mp4SubtitleCues {
   * samples on even ids, one fragmented whole-document sample on odd.
   */
 case class Mp4TtmlSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "mp4_ttml_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.SubtitleFixtures.stppMp4(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.SubtitleFixtures.stppMp4($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.SubtitleFixtures, "stppMp4", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -181,19 +132,13 @@ case class Mp4TtmlSynth(child: Expression)
   * windows-1252) — the bytes a crawler actually fetches.
   */
 case class SubtitleEncSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "subtitle_enc_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.SubtitleFixtures.encodedDoc(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.SubtitleFixtures.encodedDoc($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.SubtitleFixtures, "encodedDoc", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

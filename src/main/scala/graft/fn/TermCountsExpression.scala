@@ -1,10 +1,8 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graftbridge.AbstractDataType
-import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{LongType, MapType, StringType}
 
 /** Per-document term-frequency map as a native codegen expression —
   * SQL `term_counts(text)`, type `map<string, bigint>`. One
@@ -21,18 +19,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * (BM25 scoring a literal query needs no corpus shuffle at all).
   */
 case class TermCounts(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType =
-    MapType(StringType, LongType, valueContainsNull = false)
   override def prettyName: String = "term_counts"
 
-  override protected def nullSafeEval(s: Any): Any =
-    TextKernels.termCounts(s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.fn.TextKernels.termCounts($s)")
+  override protected def kernel: Expression =
+    Kernel.total(TextKernels, "termCounts",
+      MapType(StringType, LongType, valueContainsNull = false), child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -46,20 +40,16 @@ case class TermCounts(child: Expression)
   * of posexploding the corpus token stream once per model order.
   */
 case class NgramCounts(child: Expression, n: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   require(n >= 2, s"use term_counts for unigrams; got n=$n")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType =
-    MapType(StringType, LongType, valueContainsNull = false)
   override def prettyName: String = "ngram_counts"
 
-  override protected def nullSafeEval(s: Any): Any =
-    TextKernels.ngramCounts(s.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.fn.TextKernels.ngramCounts($s, $n)")
+  override protected def kernel: Expression =
+    Kernel.total(TextKernels, "ngramCounts",
+      MapType(StringType, LongType, valueContainsNull = false), child, n)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

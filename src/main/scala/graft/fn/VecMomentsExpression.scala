@@ -11,10 +11,10 @@ import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
 
 /** Mutable (n, Σx, packed-upper Σx⊗x) moment state with a reusable
-  * per-buffer scratch vector: the FUSED form of
-  * `vec_sum(x), vec_sum(vec_outer_upper(x))` — the unfused pipeline
-  * materialized a d(d+1)/2-double array PER ROW (16 KB at d = 64)
-  * only for the aggregate to immediately reduce it away; at sf10 that
+  * per-buffer scratch vector: the FUSED moment aggregate — summing a
+  * per-row outer product instead materializes a d(d+1)/2-double array
+  * PER ROW (16 KB at d = 64) only for the aggregate to immediately
+  * reduce it away; at sf10 that
   * allocation churn WAS q113's cost (measured 2.2× the oracle
   * engine). Here each row is read once from its ArrayData into the
   * scratch and accumulated straight into the state with no

@@ -2,7 +2,6 @@ package graft.fn
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.graftbridge.AbstractDataType
 import org.apache.spark.sql.types._
@@ -18,19 +17,13 @@ import org.apache.spark.sql.types._
   * reproduce.
   */
 case class VorbisEncodeSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = VorbisEncodeSynth.Schema
-  override def nullable: Boolean = false
   override def prettyName: String = "vorbis_encode_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    VorbisEncodeSynth.row(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.fn.VorbisEncodeSynth.row($id);")
+  override protected def kernel: Expression =
+    Kernel.total(VorbisEncodeSynth, "row", VorbisEncodeSynth.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -1,10 +1,8 @@
 package graft.fn
 
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.AbstractDataType
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.BinaryType
 
 /** Real WAV (RIFF PCM) audio features as a native Catalyst expression
   * — the audio sibling of [[PngGrayFeatures]]: one static call to the
@@ -15,28 +13,13 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
   * mixed asset tables route cleanly by modality.
   */
 case class WavPcmFeatures(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "wav_pcm_features"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.Wav.pcmFeaturesOrNull(bytes.asInstanceOf[Array[Byte]])
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |double[] ${ev.value}_f = graft.ext.Wav.pcmFeaturesOrNull($bytes);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.doubles(graft.ext.Wav, "pcmFeaturesOrNull", child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -49,28 +32,13 @@ case class WavPcmFeatures(child: Expression)
   * in [[graft.ext.Multimodal.withFeatures]] instead of the stub.
   */
 case class FlacPcmFeatures(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "flac_pcm_features"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.Flac.pcmFeaturesOrNull(bytes.asInstanceOf[Array[Byte]])
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |double[] ${ev.value}_f = graft.ext.Flac.pcmFeaturesOrNull($bytes);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.doubles(graft.ext.Flac, "pcmFeaturesOrNull", child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -14,19 +14,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * ASS) with per-cue vs single-cluster layouts by id/2 parity.
   */
 case class WebmSubtitleSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "webm_subtitle_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.WebmFixtures.subtitleWebm(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.WebmFixtures.subtitleWebm($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.WebmFixtures, "subtitleWebm", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -39,27 +33,13 @@ case class WebmSubtitleSynth(child: Expression)
   * identically in the text pipeline.
   */
 case class WebmSubtitleCues(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = SubtitleCues.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "webm_subtitle_cues"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    WebmSubtitleCues.cuesData(bytes.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_c =
-         |  graft.fn.WebmSubtitleCues.cuesData($bytes);
-         |if (${ev.value}_c == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_c;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(WebmSubtitleCues, "cuesData", SubtitleCues.Schema, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -81,19 +61,13 @@ object WebmSubtitleCues {
   * id arithmetic mirrored by the oracle.
   */
 case class WebmBlockSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "webm_block_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    graft.ext.WebmFixtures.blockWebm(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.ext.WebmFixtures.blockWebm($id);")
+  override protected def kernel: Expression =
+    Kernel.total(graft.ext.WebmFixtures, "blockWebm", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -105,29 +79,15 @@ case class WebmBlockSynth(child: Expression)
   * stss/stsz walk ([[Mp4SyncOffsets]]).
   */
 case class WebmBlockIndex(child: Expression, maxN: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   require(maxN >= 1 && maxN <= (1 << 16), s"maxN out of range: $maxN")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = WebmBlockIndex.Schema
-  override def nullable: Boolean = true
   override def prettyName: String = "webm_block_index"
 
-  override protected def nullSafeEval(bytes: Any): Any =
-    WebmBlockIndex.blocksData(bytes.asInstanceOf[Array[Byte]], maxN)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_b =
-         |  graft.fn.WebmBlockIndex.blocksData($bytes, $maxN);
-         |if (${ev.value}_b == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_b;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(WebmBlockIndex, "blocksData", WebmBlockIndex.Schema, child, maxN)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -155,19 +115,13 @@ object WebmBlockIndex {
   * full encode→container→decode→hash chain.
   */
 case class Vp8WebmSynth(child: Expression)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(LongType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
   override def prettyName: String = "vp8_webm_synth"
 
-  override protected def nullSafeEval(id: Any): Any =
-    Vp8WebmSynth.doc(id.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, id =>
-      s"${ev.value} = graft.fn.Vp8WebmSynth.doc($id);")
+  override protected def kernel: Expression =
+    Kernel.total(Vp8WebmSynth, "doc", BinaryType, child)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -193,32 +147,16 @@ object Vp8WebmSynth {
   * any-keyframe video near-dup index (round 14).
   */
 case class WebmVp8Dhashes(child: Expression, maxN: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   require(maxN >= 1 && maxN <= (1 << 12),
     s"maxN must be in [1, 4096], got $maxN")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "webm_vp8_dhashes"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.Webm.vp8KeyframeDhashes(
-      bytes.asInstanceOf[Array[Byte]], maxN)
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |long[] ${ev.value}_f = graft.ext.Webm.vp8KeyframeDhashes($bytes, $maxN);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.longs(graft.ext.Webm, "vp8KeyframeDhashes", child, maxN)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -231,32 +169,16 @@ case class WebmVp8Dhashes(child: Expression, maxN: Int)
   * MP4 re-encode of a WebM pairs because both hash the same rule).
   */
 case class VideoKeyframeDhashes(child: Expression, maxN: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   require(maxN >= 1 && maxN <= (1 << 12),
     s"maxN must be in [1, 4096], got $maxN")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "video_kf_dhashes"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.Multimodal.keyframeDhashesRouted(
-      bytes.asInstanceOf[Array[Byte]], maxN)
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |long[] ${ev.value}_f = graft.ext.Multimodal.keyframeDhashesRouted($bytes, $maxN);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.longs(graft.ext.Multimodal, "keyframeDhashesRouted", child, maxN)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -268,32 +190,16 @@ case class VideoKeyframeDhashes(child: Expression, maxN: Int)
   * any-frame dedup gate's index, so one stream admits both containers.
   */
 case class VideoGopDhashes(child: Expression, maxN: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   require(maxN >= 1 && maxN <= (1 << 12),
     s"maxN must be in [1, 4096], got $maxN")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "video_gop_dhashes"
 
-  override protected def nullSafeEval(bytes: Any): Any = {
-    val f = graft.ext.Multimodal.gopDhashesRouted(
-      bytes.asInstanceOf[Array[Byte]], maxN)
-    if (f == null) null else new GenericArrayData(f)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, bytes =>
-      s"""
-         |long[] ${ev.value}_f = graft.ext.Multimodal.gopDhashesRouted($bytes, $maxN);
-         |if (${ev.value}_f == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(${ev.value}_f);
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.longs(graft.ext.Multimodal, "gopDhashesRouted", child, maxN)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -21,30 +21,17 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class WinnowFingerprints(child: Expression, k: Int, w: Int,
                               xx: Boolean = false)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   require(k >= 1, s"shingle size must be >= 1, got $k")
   require(w >= 1, s"window size must be >= 1, got $w")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = if (xx) "winnow_fps_xx" else "winnow_fps"
 
-  override protected def nullSafeEval(s: Any): Any =
-    TextKernels.winnowFingerprints(s.asInstanceOf[UTF8String], k, w, xx)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value}_r =
-         |  graft.fn.TextKernels.winnowFingerprints($s, $k, $w, $xx);
-         |if (${ev.value}_r == null) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  ${ev.value} = ${ev.value}_r;
-         |}
-       """.stripMargin)
+  override protected def kernel: Expression =
+    Kernel.call(TextKernels, "winnowFingerprints",
+      ArrayType(LongType, containsNull = false), child, k, w, xx)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -14,19 +14,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * scan stage.
   */
 case class WordShingles(child: Expression, n: Int)
-  extends UnaryExpression with ExpectsInputTypes {
+  extends UnaryExpression with ExpectsInputTypes with KernelCall {
 
   require(n >= 1, s"shingle size must be >= 1, got $n")
 
   override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_shingles"
 
-  override protected def nullSafeEval(s: Any): Any =
-    TextKernels.wordShingles(s.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.fn.TextKernels.wordShingles($s, $n)")
+  override protected def kernel: Expression =
+    Kernel.total(TextKernels, "wordShingles", ArrayType(StringType, containsNull = false), child, n)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

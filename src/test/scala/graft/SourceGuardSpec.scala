@@ -6,9 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-tree rules the compiler cannot check: engine code never
   * depends on the dev tools, every SparkSession comes from [[Session]],
-  * so the plans Verify checks are the plans Bench times, and fixtures are
-  * opened relative to the repository root, so a second checkout reads
-  * its own `data/`.
+  * so the plans Verify checks are the plans Bench times, kernel
+  * expressions keep one evaluation path ([[graft.fn.KernelCall]]), and
+  * fixtures are opened relative to the repository root, so a second
+  * checkout reads its own `data/`.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -39,6 +40,35 @@ class SourceGuardSpec extends AnyFunSuite {
           Some(s"$p builds its own SparkSession (use graft.Session)")
         else None
       tools ++ session
+    }
+    if (offenders.nonEmpty) fail(offenders.mkString("\n"))
+  }
+
+  test("kernel expressions generate code through KernelCall, except the named few") {
+    // every other expression in graft.fn makes its one static call
+    // through KernelCall, so eval and codegen share one path
+    val handWritten = Map(
+      "KernelCall" -> "the shared path itself",
+      "NearestCentroidCos" -> "holds the centroid matrix as a reference object",
+      "NearestCentroidScore" -> "holds the centroid matrix as a reference object",
+      "BpeEncode" -> "holds the merge ranks as a reference object",
+      "CharWindowHits" -> "holds a broadcast window-hash set as a reference object",
+      "TrigramSbNll" -> "holds the count tables as reference objects",
+      "BigramNll" -> "holds the count tables as reference objects",
+      "UnigramNll" -> "holds the count table as a reference object",
+      "ParityMinhashSig" -> "holds the hash coefficients as reference objects",
+      "UrlNormalize" -> "holds an optional broadcast suffix set as a reference object",
+      "RegisteredDomainPsl" -> "calls a method of a broadcast rule set, not a static method",
+      "VincentyKm" -> "the flagship distance; its generated code stays byte-identical",
+      "Nearest1dKey" -> "the flagship as-of join; its generated code stays byte-identical")
+    val owner = """(?:class|trait)\s+(\w+)""".r
+    val offenders = sources("src/main/scala/graft/fn").flatMap { p =>
+      val text = Files.readString(p)
+      """def\s+doGenCode""".r.findAllMatchIn(text).map { m =>
+        val cls = owner.findAllMatchIn(text.substring(0, m.start)).map(_.group(1)).toSeq.lastOption
+        (p, cls.getOrElse("?"))
+      }.filterNot { case (_, cls) => handWritten.contains(cls) }
+        .map { case (p, cls) => s"$p: $cls writes its own doGenCode (mix in KernelCall)" }
     }
     if (offenders.nonEmpty) fail(offenders.mkString("\n"))
   }
